@@ -1,7 +1,8 @@
 package graft.cdc
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{DataInputStream, DataOutputStream, EOFException, OutputStream}
 import java.net.Socket
+import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Minimal AMQP 0-9-1 wire codec — the frame grammar of the PUBLIC
@@ -65,10 +66,45 @@ private[cdc] object AmqpWire {
     def skipTable(): Unit = { val n = in.readInt(); in.skipBytes(n); () }
   }
 
-  def writeFrame(out: DataOutputStream, tpe: Int, channel: Int,
+  private def putFrame(buf: ByteBuffer, tpe: Int, channel: Int,
+      payload: Array[Byte], off: Int, len: Int): Unit = {
+    buf.put(tpe.toByte).putShort(channel.toShort).putInt(len)
+      .put(payload, off, len).put(FrameEnd.toByte)
+    ()
+  }
+
+  /** One frame, encoded whole and handed to `out` in a single write. */
+  def writeFrame(out: OutputStream, tpe: Int, channel: Int,
       payload: Array[Byte]): Unit = {
-    out.writeByte(tpe); out.writeShort(channel); out.writeInt(payload.length)
-    out.write(payload); out.writeByte(FrameEnd); out.flush()
+    val buf = ByteBuffer.allocate(payload.length + 8)
+    putFrame(buf, tpe, channel, payload, 0, payload.length)
+    out.write(buf.array()); out.flush()
+  }
+
+  /** One whole Basic.Publish — method, content-header and body frames
+    * back to back — as one array, so a publish is one socket write.
+    * Bodies larger than `frameMax` are split into (frameMax − 8)-byte
+    * chunks, the 8 bytes being the frame envelope
+    * (type+channel+size+end); a `frameMax` of 0 (the spec's Tune
+    * sentinel) means unlimited. An empty body has no body frame. */
+  def publishFrames(channel: Int, routingKey: String, body: Array[Byte],
+      frameMax: Long): Array[Byte] = {
+    val m = basicPublish(routingKey)
+    val h = contentHeader(body.length.toLong)
+    val chunk =
+      if (frameMax <= 8) body.length.max(1)
+      else math.min(frameMax - 8, Int.MaxValue.toLong).toInt
+    val bodyFrames = ((body.length.toLong + chunk - 1) / chunk).toInt
+    val buf = ByteBuffer.allocate(m.length + h.length + body.length + 8 * (2 + bodyFrames))
+    putFrame(buf, FrameMethod, channel, m, 0, m.length)
+    putFrame(buf, FrameHeader, channel, h, 0, h.length)
+    var off = 0
+    while (off < body.length) {
+      val n = math.min(chunk, body.length - off)
+      putFrame(buf, FrameBody, channel, body, off, n)
+      off += n
+    }
+    buf.array()
   }
 
   /** Read one frame, transparently skipping heartbeats. */
@@ -113,14 +149,16 @@ private[cdc] object AmqpWire {
   * Deliberately publisher-only (no consume machinery beyond publisher
   * confirms): the reference never consumes.
   *
-  * Concurrency model: ONE connection, a POOL of channels. AMQP §2.3.7
-  * allows frames of DIFFERENT channels to interleave on the wire (only
-  * a single channel's content sequence must stay contiguous), so each
-  * publishing task borrows a channel id from the pool, writes its
-  * method/header/body frames under a PER-FRAME socket lock, and
-  * returns the id — tasks on one executor no longer queue behind a
-  * single whole-publish lock, and the broker still sees one socket per
-  * JVM. The reference is single-threaded on one channel
+  * Concurrency model: ONE connection, a POOL of channels. Each
+  * publishing task borrows a channel id from the pool, encodes its
+  * method/header/body frames into one array ([[AmqpWire.publishFrames]])
+  * outside any lock, and hands that array to the socket in one write
+  * under the socket lock — so a publish costs one system call, the
+  * lock is held only for that write, and no other frame can land
+  * inside a channel's method→header→body sequence. The channel id is
+  * held across a confirm-mode wait for the broker's ack, so publishers
+  * on other channels keep writing meanwhile. The broker sees one socket
+  * per JVM. The reference is single-threaded on one channel
   * (queues.rs:17-29); the pool is the distributed analogue.
   *
   * `confirms = true` (off by default — the reference's publish is
@@ -138,12 +176,12 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
 
   private var socket: Socket = _
   private var in: DataInputStream = _
-  private var out: DataOutputStream = _
+  private var out: OutputStream = _
   // negotiated in connect(); 0 = unlimited (the spec's Tune sentinel)
   private var frameMaxBytes: Long = 0L
-  // socket-write lock: held per FRAME, not per publish — concurrent
-  // publishers on different channels contend only for single frame
-  // writes, never for a whole multi-frame publish
+  // socket-write lock: held for one write of already-encoded bytes (a
+  // whole publish, or the Close frame); the socket stream is
+  // unbuffered, so every write has reached the kernel when it returns
   private val outLock = new Object
   private var pool: ArrayBlockingQueue[Integer] = _
   // confirm mode: per-channel mailboxes fed by the reader thread;
@@ -151,8 +189,8 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
   private var acks: Map[Int, LinkedBlockingQueue[Either[String, Long]]] = Map.empty
   private var reader: Thread = _
 
-  private def send(tpe: Int, ch: Int, payload: Array[Byte]): Unit =
-    outLock.synchronized { writeFrame(out, tpe, ch, payload) }
+  private def send(bytes: Array[Byte]): Unit =
+    outLock.synchronized { out.write(bytes); out.flush() }
 
   private def expectMethod(f: Frame, classId: Int, methodId: Int): Reader = {
     require(f.tpe == FrameMethod, s"expected method frame, got type ${f.tpe}")
@@ -167,7 +205,7 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
     socket = new Socket(host, port)
     socket.setTcpNoDelay(true)
     in = new DataInputStream(socket.getInputStream)
-    out = new DataOutputStream(socket.getOutputStream)
+    out = socket.getOutputStream
     out.write(ProtocolHeader); out.flush()
     expectMethod(readFrame(in), ClassConnection, 10) // Start; args ignored
     writeFrame(out, FrameMethod, 0, method(ClassConnection, 11) { w =>
@@ -250,11 +288,12 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
 
   /** Persistent publish (queues.rs:44-64's basic_publish): method +
     * content-header + body frames on a channel borrowed from the pool
-    * for the duration of the publish. Bodies larger than the
-    * Tune-negotiated frame-max are split into (frame-max − 8)-byte
-    * chunks — the 8 bytes are the frame envelope
-    * (type+channel+size+end), per the spec's framing rule. In confirm
-    * mode, blocks until the broker acks this channel's delivery. */
+    * for the duration of the publish, written to the socket in one
+    * write; bodies larger than the Tune-negotiated frame-max are split
+    * as [[AmqpWire.publishFrames]] describes. When this returns, every
+    * byte of the publish has been handed to the kernel — the relay's
+    * cursor commit relies on that. In confirm mode, blocks until the
+    * broker acks this channel's delivery. */
   def publish(queue: String, body: Array[Byte]): Unit = {
     if (confirms) ensureReader()
     val ch: Int = pool.take()
@@ -262,17 +301,7 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
       // drop acks that leaked from an aborted predecessor on this
       // channel (e.g. a confirm that timed out, then arrived late)
       if (confirms) acks(ch).clear()
-      send(FrameMethod, ch, basicPublish(queue))
-      send(FrameHeader, ch, contentHeader(body.length.toLong))
-      val chunk =
-        if (frameMaxBytes <= 8) body.length.max(1)
-        else (frameMaxBytes - 8).toInt
-      var off = 0
-      while (off < body.length) {
-        val n = math.min(chunk, body.length - off)
-        send(FrameBody, ch, java.util.Arrays.copyOfRange(body, off, off + n))
-        off += n
-      }
+      send(publishFrames(ch, queue, body, frameMaxBytes))
       if (confirms) {
         acks(ch).poll(confirmTimeoutMs, TimeUnit.MILLISECONDS) match {
           case null => throw new java.io.IOException(
@@ -287,8 +316,10 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
 
   def close(): Unit = synchronized { if (socket != null) {
     try {
-      send(FrameMethod, 0, method(ClassConnection, 50)(
-        _.u16(200).shortstr("OK").u16(0).u16(0)))
+      outLock.synchronized {
+        writeFrame(out, FrameMethod, 0, method(ClassConnection, 50)(
+          _.u16(200).shortstr("OK").u16(0).u16(0)))
+      }
       // with a confirm-reader running, IT consumes the CloseOk (read
       // side has one owner); otherwise read it here for a clean drain
       if (reader == null) { expectMethod(readFrame(in), ClassConnection, 51); () }
@@ -310,10 +341,12 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
   * closures a continuous streaming relay deserializes share one
   * connection per executor instead of dialing the broker per task —
   * Spark tasks never close what they open, and one socket per task per
-  * micro-batch exhausts broker connection limits within hours. Publish
-  * is serialized per connection inside [[AmqpClient]] (the reference
-  * holds one connection in its single-process loop, queues.rs:17-29;
-  * one per executor JVM is the distributed analogue). */
+  * micro-batch exhausts broker connection limits within hours. Tasks
+  * sharing the connection publish concurrently on its channel pool;
+  * each publish is one socket write inside [[AmqpClient]] (the
+  * reference holds one connection in its single-process loop,
+  * queues.rs:17-29; one per executor JVM is the distributed
+  * analogue). */
 class AmqpQueue(val addr: String) extends MessageQueue {
   private val (_, _, _, _, queue) = AmqpQueue.parse(addr) // validate eagerly
 

@@ -1,10 +1,13 @@
 package graft.cdc
 
+import java.nio.charset.StandardCharsets.UTF_8
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
 /** InvalidCursor — the stored cursor predates the source's retention
   * floor, the moral equivalent of CockroachDB's "batch timestamp must
@@ -23,10 +26,13 @@ class InvalidCursorException(msg: String) extends RuntimeException(msg)
   *      `startWithRetry` drops it and restarts from scratch — exactly
   *      the reference's ignore_cursor retry.
   *
-  * Scale: classify/envelope are narrow maps; publish parallelism =
-  * partition count; the only global step is a one-value max aggregate.
-  * Cursor commit happens after the batch's publishes, so the pipeline
-  * is at-least-once into the queue (same semantics as the reference).
+  * Scale: a micro-batch is one pass over its rows. Classify/envelope
+  * are narrow maps; publish parallelism = partition count; each
+  * partition folds its resolved timestamps into a max accumulator (or
+  * an observed aggregate on the changefeed-log sink), so there is no
+  * global step and no second read of the source. The cursor commits
+  * after the batch's publishes, so the pipeline is at-least-once into
+  * the queue (same semantics as the reference).
   */
 class ChangefeedPipeline(
     queue: MessageQueue,
@@ -86,76 +92,92 @@ class ChangefeedPipeline(
     val malformed = col("tbl").isNotNull &&
       (parsed.isNull ||
         !coalesce(array_contains(json_object_keys(parsed), "after"), lit(false)))
+    val isChange = col("tbl").isNotNull
+    val isResolved = col("tbl").isNull && col("key").isNull
+    val good = if (dlq.isDefined) isChange && !malformed else isChange
+    val resolvedUs = when(isResolved, Changefeed.resolvedUsCol)
+    // one row per feed row, at most one of payload / dead / resolved_us
+    // non-null: what to publish, what to dead-letter, what to fold into
+    // the batch's cursor
+    val routed = Seq(
+      col("tbl"),
+      when(good, Changefeed.payloadCol).as("payload"),
+      (if (dlq.isDefined) when(malformed, col("value"))
+       else lit(null).cast("string")).as("dead"),
+      resolvedUs.as("resolved_us"))
+    val maxResolved = new MaxLongAccumulator
+    spark.sparkContext.register(maxResolved, "graft.max_resolved_us")
+    def commitCursor(us: Option[Long]): Unit = us.foreach { c =>
+      store.set(c.toString)
+      curAcc.add(1L)
+    }
     val writer = resumeFrom(frame, ignoreCursor).writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-        // with a DLQ the batch is read twice (route + publish) — keep
-        // the micro-batch from recomputing its source
-        val batch = if (dlq.isDefined) batch0.persist() else batch0
-        try {
-          dlq.foreach { dq =>
-            batch.where(malformed).select(col("value"))
-              .foreachPartition { (it: Iterator[Row]) =>
-                it.foreach { r =>
-                  dq.publish(r.getString(0).getBytes("UTF-8"))
-                  dlqAcc.add(1L)
-                }
-              }
-          }
-          val good = if (dlq.isDefined) !malformed else lit(true)
-          q match {
-            case log: ChangefeedLogQueue =>
-              // whole-batch publish through the DSv2 sink: one atomic
-              // segment per partition, e<batch>p<part> ids → idempotent
-              // across foreachBatch retries (effectively-once)
-              val changes = batch.where(col("tbl").isNotNull && good)
-              changes.write.format("graft-changefeed")
-                .option("path", log.dir).option("epochId", batchId)
-                .mode("append").save()
-              acc.add(changes.count())
-            case _ => router match {
-              case Some(make) =>
-                // MULTI-TABLE fan-out (the streaming form of
-                // cdc_table_router #156): the reference binds one
-                // process per table and names the queue after it
-                // (cli.yml, queues.rs:17-30) — a consolidated relay
-                // runs ONE stream over a multi-table feed and routes
-                // each change row to the queue named after ITS table
-                // tag. Queue handles are resolved once per (partition,
-                // table) — |tables| broker channels per task, not per
-                // record — and rows of every table still ride the same
-                // micro-batch, checkpoint, and cursor.
-                val payloads = batch.where(col("tbl").isNotNull && good)
-                  .select(col("tbl"), Changefeed.payloadCol.as("payload"))
-                payloads.foreachPartition { (it: Iterator[Row]) =>
-                  val perTable =
-                    scala.collection.mutable.HashMap.empty[String, MessageQueue]
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        q match {
+          case log: ChangefeedLogQueue =>
+            // a DLQ needs per-row publishing the DSv2 write cannot do,
+            // so with one configured this path reads the batch twice
+            dlq.foreach { dq =>
+              batch.where(malformed).select(col("value"))
+                .foreachPartition { (it: Iterator[Row]) =>
                   it.foreach { r =>
-                    val tq = perTable.getOrElseUpdate(r.getString(0),
-                      make(r.getString(0)))
-                    tq.publish(r.getString(1).getBytes("UTF-8"))
-                    acc.add(1L)
-                  }
-                }
-              case None =>
-                val payloads = batch.where(col("tbl").isNotNull && good)
-                  .select(Changefeed.payloadCol.as("payload"))
-                payloads.foreachPartition { (it: Iterator[Row]) =>
-                  it.foreach { r =>
-                    q.publish(r.getString(0).getBytes("UTF-8"))
-                    acc.add(1L)
+                    dq.publish(r.getString(0).getBytes(UTF_8))
+                    dlqAcc.add(1L)
                   }
                 }
             }
-          }
-          val maxResolved = batch
-            .where(col("tbl").isNull && col("key").isNull)
-            .agg(max(Changefeed.resolvedUsCol)).collect()(0)
-          if (!maxResolved.isNullAt(0)) {
-            store.set(maxResolved.getLong(0).toString)
-            curAcc.add(1L)
-          }
-        } finally if (dlq.isDefined) { batch.unpersist(); () }
+            // whole-batch publish through the DSv2 sink: one atomic
+            // segment per partition, e<batch>p<part> ids → idempotent
+            // across foreachBatch retries (effectively-once). The row
+            // count and the max resolved timestamp are observed on the
+            // same pass, ahead of the change-row filter.
+            val seen = Observation()
+            batch.observe(seen, count(when(good, lit(1))).as("rows"),
+                max(resolvedUs).as("max_resolved"))
+              .where(good)
+              .write.format("graft-changefeed")
+              .option("path", log.dir).option("epochId", batchId)
+              .mode("append").save()
+            val m = Await.result(seen.future, ChangefeedPipeline.ObservationTimeout)
+            acc.add(m.getAs[Long]("rows"))
+            commitCursor(Option(m.getAs[java.lang.Long]("max_resolved")).map(_.longValue))
+          case _ =>
+            // every row-publish path — single queue, per-table router,
+            // DLQ — is ONE foreachPartition: publish or dead-letter each
+            // row and fold resolved timestamps into `maxResolved`. The
+            // cursor commits after the action returns, i.e. after every
+            // publish of the batch: at-least-once into the queue.
+            maxResolved.reset()
+            batch.select(routed: _*).foreachPartition { (it: Iterator[Row]) =>
+              // MULTI-TABLE fan-out (the streaming form of
+              // cdc_table_router #156): the reference binds one process
+              // per table and names the queue after it (cli.yml,
+              // queues.rs:17-30) — a consolidated relay runs ONE stream
+              // over a multi-table feed and routes each change row to
+              // the queue named after ITS table tag. Queue handles are
+              // resolved once per (partition, table), not per record.
+              val perTable =
+                scala.collection.mutable.HashMap.empty[String, MessageQueue]
+              it.foreach { r =>
+                if (!r.isNullAt(1)) {
+                  val target = router match {
+                    case Some(make) =>
+                      perTable.getOrElseUpdate(r.getString(0), make(r.getString(0)))
+                    case None => q
+                  }
+                  target.publish(r.getString(1).getBytes(UTF_8))
+                  acc.add(1L)
+                } else if (!r.isNullAt(2)) {
+                  dlq.get.publish(r.getString(2).getBytes(UTF_8))
+                  dlqAcc.add(1L)
+                } else if (!r.isNullAt(3)) maxResolved.add(r.getLong(3))
+                else if (!r.isNullAt(0)) throw new IllegalStateException(
+                  s"change row of table ${r.getString(0)} has a null key or value")
+              }
+            }
+            commitCursor(if (maxResolved.isZero) None else Some(maxResolved.value))
+        }
         ()
       }
     trigger.fold(writer)(writer.trigger).start()
@@ -234,6 +256,11 @@ class ChangefeedPipeline(
 
 object ChangefeedPipeline {
 
+  /** How long the driver waits, after the changefeed-log write returned,
+    * for that write's observed row count and max resolved timestamp
+    * (they arrive through Spark's listener bus). */
+  private val ObservationTimeout = 5.minutes
+
   /** An async stream failure arrives wrapped (StreamingQueryException →
     * SparkException → ...); walk the cause chain for the real reason. */
   private[cdc] def causedByInvalidCursor(t: Throwable): Boolean = {
@@ -266,4 +293,17 @@ object ChangefeedPipeline {
       w.commit()
       ()
     }
+}
+
+/** Largest value added across a job's tasks; zero (nothing added) reads
+  * as `isZero`. Folds a micro-batch's resolved timestamps on the same
+  * pass that publishes its change rows. */
+private[cdc] final class MaxLongAccumulator extends AccumulatorV2[Long, Long] {
+  private var m = Long.MinValue
+  override def isZero: Boolean = m == Long.MinValue
+  override def copy(): MaxLongAccumulator = { val a = new MaxLongAccumulator; a.m = m; a }
+  override def reset(): Unit = m = Long.MinValue
+  override def add(v: Long): Unit = if (v > m) m = v
+  override def merge(other: AccumulatorV2[Long, Long]): Unit = add(other.value)
+  override def value: Long = m
 }

@@ -24,6 +24,42 @@ class AmqpQueueSpec extends AnyFunSuite {
     assert(ProtocolHeader.map("%02x".format(_)).mkString === "414d515000000901")
   }
 
+  private def hex(b: Array[Byte]): String = b.map("%02x".format(_)).mkString
+
+  /** (type, channel, payload size) of each frame in an encoded publish. */
+  private def frames(b: Array[Byte]): Seq[(Int, Int, Int)] = {
+    val in = new java.io.DataInputStream(new java.io.ByteArrayInputStream(b))
+    Iterator.continually(in.available()).takeWhile(_ > 0)
+      .map { _ => val f = readFrame(in); (f.tpe, f.channel, f.payload.length) }.toSeq
+  }
+
+  test("golden bytes: a whole publish is method, header and body frames back to back") {
+    val got = publishFrames(1, "q1", "hello".getBytes(UTF_8), 131072L)
+    assert(hex(got) ===
+      // method frame: type 1, channel 1, size 11, Basic.Publish, end
+      "01" + "0001" + "0000000b" + "003c00280000" + "00" + "02" + "7131" + "00" + "ce" +
+      // header frame: type 2, channel 1, size 15, body size 5, end
+      "02" + "0001" + "0000000f" + "003c" + "0000" + "0000000000000005" + "1000" + "02" + "ce" +
+      // body frame: type 3, channel 1, size 5, "hello", end
+      "03" + "0001" + "00000005" + "68656c6c6f" + "ce")
+  }
+
+  test("publish encoding: body split boundaries around frame-max - 8") {
+    val fm = 64L // body chunks of 56 B
+    def bodies(n: Int, frameMax: Long = fm): Seq[Int] =
+      frames(publishFrames(3, "q", Array.fill[Byte](n)(7), frameMax))
+        .collect { case (FrameBody, 3, size) => size }
+    // an empty body has a header and no body frame
+    assert(frames(publishFrames(3, "q", Array.emptyByteArray, fm)).map(_._1) ===
+      Seq(FrameMethod, FrameHeader))
+    assert(bodies(56) === Seq(56))     // exactly frame-max - 8: one frame
+    assert(bodies(57) === Seq(56, 1))  // frame-max - 7: two frames
+    assert(bodies(500) === Seq.fill(8)(56) :+ 52)
+    assert(bodies(500, frameMax = 0L) === Seq(500)) // 0 = unlimited
+    // every frame of the publish carries the borrowed channel
+    assert(frames(publishFrames(9, "q", Array.fill[Byte](57)(1), fm)).forall(_._2 == 9))
+  }
+
   test("publishes through a real socket: handshake, declare, ordered delivery") {
     val broker = new FakeAmqpBroker
     try {
@@ -94,6 +130,9 @@ class AmqpQueueSpec extends AnyFunSuite {
       // the pool was actually USED concurrently: >1 channel id on the wire
       assert(broker.publishChannels.size >= 2,
         s"all publishes serialized on ${broker.publishChannels}")
+      // ...yet each publish reached the wire whole: no frame of another
+      // channel ever landed inside a method→header→body sequence
+      assert(broker.interleavedFrames === 0L)
       q.close()
     } finally broker.stop()
   }

@@ -179,6 +179,98 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(store.get() === Some("7"))
   }
 
+  private def change(i: Int): RawFeedRow =
+    RawFeedRow(i, Some("events"), Some(s"[$i]"), s"""{"after": {"event_id": $i}}""")
+  private def resolvedAt(us: Long, value: String = null): RawFeedRow =
+    RawFeedRow(us, None, None, Option(value).getOrElse(s"""{"resolved": "$us.0000000000"}"""))
+
+  test("a batch of only resolved rows commits their max and publishes nothing") {
+    val qname = "t-only-resolved"
+    InMemoryQueue.clear(qname)
+    val store = new InMemoryCursorStore(qname)
+    val pipeline = new ChangefeedPipeline(new InMemoryQueue(qname), store, ckpt())
+    val in = MemoryStream[RawFeedRow](93, spark, None)
+    in.addData(resolvedAt(5), resolvedAt(9), resolvedAt(7))
+    val q = pipeline.start(spark, in.toDF())
+    q.processAllAvailable(); q.stop()
+    assert(store.get() === Some("9"))
+    assert(InMemoryQueue.messages(qname).isEmpty)
+    assert(pipeline.cursorsCommitted.value === 1L)
+  }
+
+  test("a batch without resolved rows publishes and leaves the cursor untouched") {
+    val qname = "t-no-resolved"
+    InMemoryQueue.clear(qname)
+    val store = new InMemoryCursorStore(qname)
+    store.set("3")
+    val pipeline = new ChangefeedPipeline(new InMemoryQueue(qname), store, ckpt())
+    val in = MemoryStream[RawFeedRow](94, spark, None)
+    in.addData((4 to 9).map(change): _*)
+    val q = pipeline.start(spark, in.toDF())
+    q.processAllAvailable(); q.stop()
+    assert(InMemoryQueue.messages(qname).size === 6)
+    assert(store.get() === Some("3"))
+    assert(pipeline.cursorsCommitted.value === 0L)
+  }
+
+  test("a resolved row whose value does not parse is ignored") {
+    val qname = "t-bad-resolved"
+    InMemoryQueue.clear(qname)
+    val store = new InMemoryCursorStore(qname)
+    val pipeline = new ChangefeedPipeline(new InMemoryQueue(qname), store, ckpt())
+    val in = MemoryStream[RawFeedRow](95, spark, None)
+    val q = pipeline.start(spark, in.toDF())
+    // alone, an unparseable resolved row commits nothing...
+    in.addData(change(1), resolvedAt(20, """{"resolved": "2"""))
+    q.processAllAvailable()
+    assert(store.get() === None)
+    // ...and beside a parseable one it does not take part in the max
+    in.addData(resolvedAt(30, "not json"), resolvedAt(40, """{"other": "40.0"}"""),
+      resolvedAt(12))
+    q.processAllAvailable(); q.stop()
+    assert(store.get() === Some("12"))
+    assert(InMemoryQueue.messages(qname).size === 1)
+  }
+
+  test("a crash between publish and cursor commit loses nothing on restart") {
+    val qname = "t-crash"
+    InMemoryQueue.clear(qname)
+    FailingQueue.calls.remove(qname)
+    val store = new InMemoryCursorStore(qname)
+    val cp = ckpt()
+    val in = MemoryStream[RawFeedRow](96, spark, None)
+    val first = Seq(change(1), change(2), resolvedAt(10))
+    val second = (11 to 18).map(change) :+ resolvedAt(20)
+    // publish #5 is the third change row of the second batch: the
+    // broker drops after part of that batch went out
+    val crashing = new ChangefeedPipeline(new FailingQueue(qname, failOn = 5), store, cp)
+    val q1 = crashing.start(spark, in.toDF())
+    in.addData(first: _*)
+    q1.processAllAvailable()
+    assert(store.get() === Some("10"))
+    in.addData(second: _*)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](q1.processAllAvailable())
+    q1.stop()
+    // the failed batch committed no cursor, though its resolved row was read
+    assert(store.get() === Some("10"))
+    assert(InMemoryQueue.messages(qname).size < 2 + 8)
+
+    // restart from the same checkpoint: the failed batch runs again whole
+    val healthy = new ChangefeedPipeline(new InMemoryQueue(qname), store, cp)
+    val q2 = healthy.start(spark, in.toDF())
+    q2.processAllAvailable(); q2.stop()
+    assert(store.get() === Some("20"))
+    assert(healthy.messagesSent.value === 8L) // every row of that batch
+    val msgs = InMemoryQueue.messages(qname)
+    val want = (first ++ second).filter(_.tbl.isDefined).map(r =>
+      s"""{"table":"events","key":"${r.key.get}","value":${r.value}}""")
+    assert(msgs.toSet === want.toSet) // nothing lost, nothing foreign
+    // duplicates come only from the batch that failed
+    val dups = msgs.groupBy(identity).collect { case (m, n) if n.size > 1 => m }.toSet
+    val secondBatch = want.drop(2).toSet
+    assert(dups.subsetOf(secondBatch))
+  }
+
   test("without a DLQ the relay forwards bytes verbatim (reference behavior)") {
     val qname = "t-nodlq"
     InMemoryQueue.clear(qname)
@@ -192,6 +284,24 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(InMemoryQueue.messages(qname).size === 1)
     assert(pipeline.messagesDeadLettered.value === 0L)
   }
+}
+
+/** A queue whose `failOn`-th publish (counted per name across the
+  * JVM's tasks) throws, as a broker that drops mid-batch would; every
+  * other publish lands in the [[InMemoryQueue]] of the same name. */
+class FailingQueue(name: String, failOn: Int) extends MessageQueue {
+  override def publish(data: Array[Byte]): Unit = {
+    if (FailingQueue.calls.getOrElseUpdate(name,
+        new java.util.concurrent.atomic.AtomicInteger).incrementAndGet() == failOn)
+      throw new java.io.IOException(s"broker dropped at publish $failOn")
+    InMemoryQueue.buffer(name).add(new String(data, "UTF-8"))
+    ()
+  }
+}
+
+object FailingQueue {
+  val calls = scala.collection.concurrent.TrieMap.empty[String,
+    java.util.concurrent.atomic.AtomicInteger]
 }
 
 /** Raw (sort_us, tbl, key, value) feed row for poison-payload tests. */

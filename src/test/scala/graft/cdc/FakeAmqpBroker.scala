@@ -20,7 +20,10 @@ import scala.collection.mutable.ArrayBuffer
   * every delivery is recorded, and Confirm.Select arms per-channel
   * publisher confirms — each completed delivery on a confirm channel
   * gets a Basic.Ack unless `dropAcks` simulates a broker that takes
-  * the message but never confirms it. */
+  * the message but never confirms it. `interleavedFrames` counts
+  * frames that arrived inside another channel's method→header→body
+  * sequence on the same connection: the client writes each publish
+  * whole, so it should stay 0. */
 private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
     dropAcks: Boolean = false, fixedPort: Int = 0) {
   import AmqpWire._
@@ -54,6 +57,9 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
   @volatile var declared: String = ""
   @volatile var error: Throwable = _
   @volatile private var closed = false
+  private val interleaved = new java.util.concurrent.atomic.AtomicLong
+
+  def interleavedFrames: Long = interleaved.get
 
   /** When set, the next Basic.Publish method frame hard-drops its
     * connection BEFORE any content is accepted — a deterministic
@@ -130,6 +136,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
     val pending = mutable.Map.empty[Int, Pending] // channel → in-flight content
     val confirming = mutable.Set.empty[Int] // channels with confirms armed
     val deliveryTag = mutable.Map.empty[Int, Long].withDefaultValue(0L)
+    var inContent = -1 // channel whose publish sequence is open, or -1
 
     def complete(ch: Int, p: Pending): Unit = {
       buf.synchronized {
@@ -138,6 +145,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
         ()
       }
       pending.remove(ch)
+      inContent = -1
       if (confirming(ch) && !dropAcks) {
         val tag = deliveryTag(ch) + 1
         deliveryTag(ch) = tag
@@ -150,6 +158,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
     var running = true
     while (running) {
       val f = readFrame(in)
+      if (inContent >= 0 && f.channel != inContent) interleaved.incrementAndGet()
       f.tpe match {
         case FrameMethod =>
           val r = new Reader(f.payload)
@@ -178,6 +187,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
                 require(!pending.contains(f.channel),
                   s"publish started on channel ${f.channel} mid-content")
                 pending(f.channel) = new Pending(rk)
+                inContent = f.channel
               }
             case (ClassConnection, 50) =>
               writeFrame(out, FrameMethod, 0, method(ClassConnection, 51)(w => w))
