@@ -35,9 +35,48 @@ object Bench {
       }
     }
 
+  /** The compact summary line (see its use in `main`): "queries" holds
+    * the slowest entries, largest first, up to the first one that does
+    * not fit `budget` bytes; failed entries (−1) are left out. Numbers
+    * are fixed-point with two decimals, never exponent form. */
+  def compactLine(total: Double, entries: Map[String, Double], nErrors: Int,
+      gcMs: Long, sfDir: String, cpus: Int, epochMs: Long,
+      budget: Int = 1400): String = {
+    def fmt2(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
+    val ents = entries.toSeq.filter(_._2 >= 0).sortBy(-_._2)
+      .map { case (k, v) => s""""${esc(k)}":${fmt2(v)}""" }
+    // joined length after each entry: the entries plus their commas
+    val joined = ents.scanLeft(-1)(_ + _.length + 1).tail
+    val shown = ents.take(joined.takeWhile(_ <= budget).size)
+    s"""{"metric":"total","value":${fmt2(total)},"unit":"sec",""" +
+      s""""n_queries":${entries.size},""" +
+      s""""queries_in_line":${shown.size},"queries":{${shown.mkString(",")}},""" +
+      s""""n_errors":$nErrors,"gc_ms":$gcMs,""" +
+      s""""sf":"${esc(sfDir)}","cpus":$cpus,"epoch_ms":$epochMs}"""
+  }
+
+  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+    .replaceAll("[\\x00-\\x1f]", " ")
+
+  /** Times the rebuild of every key `memo` holds for this session, with
+    * the memos it reads still warm: per key the min of three builds,
+    * each right after the memo alone is invalidated; returns the sum. */
+  private def timeBuilds[K, V](spark: SparkSession, memo: SessionMemo[K, V]): Double = {
+    val keys = memo.keys(spark)
+    val reps = (1 to 3).map { _ =>
+      memo.invalidate(spark)
+      keys.map { k =>
+        val t0 = System.nanoTime()
+        memo(spark, k)
+        (System.nanoTime() - t0) / 1e9
+      }
+    }
+    reps.transpose.map(_.min).sum
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     // SPARK_GRAFT_ONLY=q1_agg,stream_dedup_by_key → isolated measurement
     // of a subset (co-running the full suite perturbs individual query
     // times by up to 3× via GC/JIT/page-cache interference; this is how
@@ -65,11 +104,10 @@ object Bench {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
     // Drop anything operators cached so the timed pass recomputes data.
-    // NOTE: the dedup family's candidate-pair memo (Dedup.candidateMemo)
-    // survives this on purpose — four queries sharing one candidate
-    // computation per session IS the production shape; its cost is
-    // timed explicitly below as "dedup_candidates_build" so a
-    // candidate-generation regression still shows in this output.
+    // The SessionMemo values survive this on purpose — queries sharing
+    // one build per session IS the production shape; every memo build
+    // is timed on its own after the timed pass as "<memo>_build", so a
+    // build regression still shows in this output.
     spark.catalog.clearCache()
     val gc0 = gcMs
     // Best-of-3: the host has heavy exogenous load spikes; min-of-n is
@@ -102,119 +140,19 @@ object Bench {
       // a failed query reports a sentinel -1 so it can never read as fast
       name -> (if (errors.contains(name)) -1.0 else times.min)
     }
-    // The shared candidate-pair stage, timed on its own (see NOTE above).
-    // Skipped under SPARK_GRAFT_ONLY subsets that don't touch the family.
-    val dedupFamily = Set("dedup_ngram_jaccard", "dedup_containment",
-      "dedup_cluster", "graph_pagerank")
-    val candEntry =
-      if (selected.keySet.exists(dedupFamily)) {
-        val times = (1 to 3).map { _ =>
-          graft.operators.Dedup.invalidateCandidates(spark)
-          val t0 = System.nanoTime()
-          graft.operators.Dedup.candidatePairs(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Map("dedup_candidates_build" -> times.min)
-      } else Map.empty[String, Double]
-    // Same deal for the CC label memo (Dedup.clusterLabels, r17): six
-    // queries share one labeling per session; the fixpoint is timed
-    // here on its own so a CC regression still shows in this output.
-    val ccFamily = Set("dedup_cluster", "dedup_cluster_sizes",
-      "dedup_canonical", "graph_bfs_dist", "pipeline_funnel",
-      "dedup_cluster_embed")
-    val ccEntry =
-      if (selected.keySet.exists(ccFamily)) {
-        val times = (1 to 3).map { _ =>
-          graft.operators.Dedup.invalidateClusterLabels(spark)
-          val t0 = System.nanoTime()
-          graft.operators.Dedup.clusterLabels(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Map("dedup_cc_build" -> times.min)
-      } else Map.empty[String, Double]
-    // Same deal for the MinHash signature memo (r17): three queries
-    // share one 96-permutation signature table per session.
-    val sigFamily = Set("dedup_minhash_lsh", "dedup_minhash_calibration",
-      "dedup_lsh_tuning")
-    val sigEntry =
-      if (selected.keySet.exists(sigFamily)) {
-        val times = (1 to 3).map { _ =>
-          graft.operators.Dedup.invalidateMinhashSignatures(spark)
-          val t0 = System.nanoTime()
-          graft.operators.Dedup.minhashSignatures(spark, sfDir, 96).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Map("dedup_minhash_sigs_build" -> times.min)
-      } else Map.empty[String, Double]
-    // Same deal for the exploded shingle-hash memo (r18): the
-    // candidate build plus both thresholded jaccard queries share one
-    // tokenize+shingle+explode per session.
-    val shingleFamily = dedupFamily ++
-      Set("dedup_jaccard_prefix", "dedup_jaccard_global")
-    val shingleEntry =
-      if (selected.keySet.exists(shingleFamily)) {
-        val times = (1 to 3).map { _ =>
-          graft.operators.Dedup.invalidateShingles(spark)
-          val t0 = System.nanoTime()
-          graft.operators.Dedup.shingleFrame(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Map("dedup_shingles_build" -> times.min)
-      } else Map.empty[String, Double]
-    // Same deal for the ANN base-frame memos (r18): the corpus frame
-    // (ivf_topk/ivf_kmeans/cell_health/cell_split) and the
-    // unit-normalized frame (pq_adc/sq via pqStages, the IVF-PQ build)
-    // were each materialized per call; one session build serves all.
-    val annBaseFamily = Set("ann_ivf_topk", "ann_ivf_kmeans",
-      "ann_cell_health", "ann_cell_split", "ann_pq_adc", "ann_sq_topk",
-      "ann_ivf_pq", "ann_recall_report", "ann_lsh_topk",
-      "ann_bruteforce_topk", "ann_range_search", "ann_filtered_topk",
-      "ann_mmr_topk", "knn_label_vote", "ann_centroid_classify",
-      "dedup_embedding", "dedup_embedding_lsh", "dedup_semantic",
-      "dedup_cluster_embed")
-    val annBaseEntry =
-      if (selected.keySet.exists(annBaseFamily)) {
-        val times = (1 to 3).map { _ =>
-          graft.operators.Similarity.invalidateBaseMemos(spark)
-          val t0 = System.nanoTime()
-          graft.operators.Similarity.corpusCut(spark, sfDir).count()
-          graft.operators.Similarity.unitCut(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        Map("ann_base_build" -> times.min)
-      } else Map.empty[String, Double]
-    // Same deal for the ANN truth memo (Similarity.bruteforceTopk):
-    // consumers ride the per-session checkpoint; the scan itself is
-    // timed here so a truth-build regression still shows in the output.
-    val annFamily = Set("ann_bruteforce_topk", "ann_recall_report")
-    val ivfPqFamily = Set("ann_ivf_pq", "ann_recall_report")
-    val truthEntry = {
-      val truth =
-        if (selected.keySet.exists(annFamily)) {
-          val times = (1 to 3).map { _ =>
-            graft.operators.Similarity.invalidateMemos(spark)
-            val t0 = System.nanoTime()
-            graft.operators.Similarity.bruteforceTopk(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          Map("ann_truth_build" -> times.min)
-        } else Map.empty[String, Double]
-      val ivfpq =
-        if (selected.keySet.exists(ivfPqFamily)) {
-          val times = (1 to 3).map { _ =>
-            graft.operators.Similarity.invalidateMemos(spark)
-            val t0 = System.nanoTime()
-            graft.operators.Similarity.ivfPqTopk(spark, sfDir).count()
-            (System.nanoTime() - t0) / 1e9
-          }
-          Map("ann_ivfpq_build" -> times.min)
-        } else Map.empty[String, Double]
-      truth ++ ivfpq
+    // Every memo the selected queries built in warm-up, rebuilt and
+    // timed on its own (see timeBuilds).
+    val builds = SessionMemo.all.filter(_.keys(spark).nonEmpty).map { memo =>
+      val name = s"${memo.name}_build"
+      val t = try timeBuilds(spark, memo) catch { case e: Throwable =>
+        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        -1.0
+      }
+      name -> t
     }
+    val entries = results ++ builds
     val gcTotalMs = gcMs - gc0
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\x00-\\x1f]", " ")
-    val qs = (results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry).map { case (k, v) => s"\"" + k + "\":" + v }
+    val qs = entries.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => s"\"${esc(k)}\":\"${esc(v)}\"" }
       .mkString("{", ",", "}")
@@ -225,7 +163,7 @@ object Bench {
     val ioJson = io.map { case (k, s) =>
       s""""${esc(k)}":{"shuffle_read_b":${s.shuffleReadB},"shuffle_write_b":${s.shuffleWriteB},"spill_b":${s.spillB},"peak_exec_mem_b":${s.peakExecMemB},"input_read_b":${s.inputReadB}}"""
     }.mkString("{", ",", "}")
-    val total = (results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry).values.filter(_ >= 0).sum
+    val total = entries.values.filter(_ >= 0).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_errors":${errors.size},"gc_ms":$gcTotalMs,"io":$ioJson,"sf":"$sfDir","epoch_ms":${System.currentTimeMillis()}}"""
     // Persist the FULL per-query record in-repo: the round driver
     // truncates its bench artifact to a 2000-char tail, losing most
@@ -245,8 +183,7 @@ object Bench {
             && !l.contains(""""noisy":true"""))
           .lastOption
       else None
-      val regs = regressions(prevLine.map(parseQueries).getOrElse(Map.empty),
-        results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry)
+      val regs = regressions(prevLine.map(parseQueries).getOrElse(Map.empty), entries)
       regs.toSeq.sortBy(-_._2._2).foreach { case (k, (p, v)) =>
         System.err.println(f"[bench] REGRESSION $k: $p%.2f s -> $v%.2f s (${v / p}%.1fx)")
       }
@@ -266,18 +203,17 @@ object Bench {
         // that ADDS queries would otherwise read as noise against the
         // smaller baseline suite (r14: +13 ops ≈ +10 s legitimate)
         val prevQ = parseQueries(l)
-        val curQ = results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry
-        val shared = prevQ.keySet.intersect(curQ.keySet)
-          .filter(k => prevQ(k) > 0 && curQ(k) > 0)
+        val shared = prevQ.keySet.intersect(entries.keySet)
+          .filter(k => prevQ(k) > 0 && entries(k) > 0)
         val overTotal =
           if (shared.nonEmpty) {
             val p = shared.toSeq.map(prevQ).sum
-            val c = shared.toSeq.map(curQ).sum
+            val c = shared.toSeq.map(entries).sum
             c > 1.3 * p
           } else field(l, "value").exists(p => p > 0 && total > 1.3 * p)
         // gc budget scales with suite growth for the same reason
         val growth =
-          if (prevQ.nonEmpty) curQ.size.toDouble / prevQ.size else 1.0
+          if (prevQ.nonEmpty) entries.size.toDouble / prevQ.size else 1.0
         val overGc = field(l, "gc_ms")
           .exists(p => p >= 500 && gcTotalMs > 1.3 * p * math.max(growth, 1.0))
         overTotal || overGc
@@ -309,25 +245,9 @@ object Bench {
     // to the SLOWEST entries that fit a 1400-byte budget (the tail
     // must also hold sbt's epilogue); "n_queries" carries the true
     // count and the FULL map stays in the line above +
-    // bench_full.json/bench_history.jsonl. Purely additive output —
-    // the full line, the timed action and every entry are unchanged.
-    val compactBudget = 1400
-    def fmt2(v: Double): String = (math.round(v * 100) / 100.0).toString
-    val topSb = new StringBuilder
-    var nTop = 0
-    (results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry).toSeq
-      .sortBy(-_._2).foreach { case (k, v) =>
-        val ent = s""""${esc(k)}":${fmt2(v)}"""
-        if (topSb.length + ent.length + 1 <= compactBudget) {
-          if (nTop > 0) topSb.append(',')
-          topSb.append(ent); nTop += 1
-        }
-      }
-    println(s"""{"metric":"total","value":${fmt2(total)},"unit":"sec",""" +
-      s""""n_queries":${(results ++ candEntry ++ ccEntry ++ sigEntry ++ shingleEntry ++ annBaseEntry ++ truthEntry).size},""" +
-      s""""queries_in_line":$nTop,"queries":{$topSb},""" +
-      s""""n_errors":${errors.size},"gc_ms":$gcTotalMs,""" +
-      s""""sf":"$sfDir","cpus":$cpus,"epoch_ms":${System.currentTimeMillis()}}""")
+    // bench_full.json/bench_history.jsonl.
+    println(compactLine(total, entries, errors.size, gcTotalMs, sfDir, cpus,
+      System.currentTimeMillis()))
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)
   }

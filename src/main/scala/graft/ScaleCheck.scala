@@ -517,13 +517,7 @@ object ScaleCheck {
       val io = scala.collection.mutable.HashMap.empty[String, IoSnapshot]
       val t = ops.map { case (name, fn) =>
         val times = (1 to reps).map { rep =>
-          Dedup.invalidateCandidates(spark)
-          Dedup.invalidateClusterLabels(spark)
-          Dedup.invalidateMinhashSignatures(spark)
-          Dedup.invalidateShingles(spark)
-          Similarity.invalidateMemos(spark)
-          Similarity.invalidateBaseMemos(spark)
-          TextAnalysis.invalidateBpe(spark)
+          SessionMemo.invalidateAll(spark)
           spark.catalog.clearCache()
           val pre = if (rep == 1) Some(listener.snapshot(spark.sparkContext))
             else None

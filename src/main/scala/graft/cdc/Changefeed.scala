@@ -35,10 +35,12 @@ object Changefeed {
     lit("\",\"value\":"), col("value"), lit("}"))
 
   /** Resolved timestamp (µs) parsed out of a resolved-row value,
-    * mirroring the reference's JsonCursor parse (src/main.rs:233-238). */
+    * mirroring the reference's JsonCursor parse (src/main.rs:233-238).
+    * NULL when the value does not parse: `try_cast`, because the ANSI
+    * cast would fail the whole micro-batch on `{"resolved": "soon"}`. */
   def resolvedUsCol: Column =
     substring_index(get_json_object(col("value"), "$.resolved"), ".", 1)
-      .cast("long")
+      .try_cast("long")
 
   /** The {"after": {...}} document for one event row. */
   private def afterJson: Column = concat(

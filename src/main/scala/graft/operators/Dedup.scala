@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Checkpoints.CutOps
 import graft.functions.Fns._
 
@@ -75,89 +75,48 @@ object Dedup {
     * single most expensive stage in the suite and FOUR queries consume
     * it (ngram_jaccard, containment, cluster, pagerank). The memo hands
     * every consumer the same eagerly-checkpointed (inter, sizes) frames
-    * — identical rows by construction, computed once. Keyed weakly by
-    * session; values are SOFT references because a DataFrame strongly
-    * references its SparkSession — a plain value would pin the map key
-    * forever (the classic WeakHashMap self-reference pitfall) and keep
-    * stopped sessions plus their checkpoint blocks on heap for the JVM
-    * lifetime. Soft refs survive normal operation, die under memory
-    * pressure, and once collected the ContextCleaner frees the
-    * checkpoint blocks; a consumer just recomputes. */
+    * — identical rows by construction, computed once in a
+    * [[graft.SessionMemo]]. Bench times the build as
+    * "dedup_candidates_build". */
   private val candidateMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Int),
-        java.lang.ref.SoftReference[(DataFrame, DataFrame)]]]()
+    SessionMemo[(String, Int), (DataFrame, DataFrame)]("dedup_candidates") {
+      case (spark, (sfDir, maxDf)) =>
+        val (inter, sizes) = computeCandidateInter(spark, sfDir, maxDf)
+        (inter.cut, sizes.cut)
+    }
 
-  /** Drop this session's memoized candidate frames (ScaleCheck uses it
-    * so each timed repetition pays the full candidate-generation cost
-    * rather than reading the r6 memo's checkpoint blocks). The dropped
-    * frames' checkpoint blocks are released by the ContextCleaner once
-    * the frames are garbage-collected — there is no public API to free
-    * localCheckpoint blocks eagerly. */
-  def invalidateCandidates(spark: SparkSession): Unit =
-    candidateMemo.synchronized { candidateMemo.remove(spark); () }
+  /** Drop this session's memoized candidate frames, so the next
+    * consumer pays the full candidate-generation cost. */
+  def invalidateCandidates(spark: SparkSession): Unit = candidateMemo.invalidate(spark)
 
   private def candidateInter(spark: SparkSession, sfDir: String,
       maxDf: Int = defaultMaxShingleDf): (DataFrame, DataFrame) =
-    candidateMemo.synchronized {
-      var perSession = candidateMemo.get(spark)
-      if (perSession == null) {
-        perSession = scala.collection.mutable.Map.empty
-        candidateMemo.put(spark, perSession)
-      }
-      perSession.get((sfDir, maxDf)).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val (inter, sizes) = computeCandidateInter(spark, sfDir, maxDf)
-          val v = (inter.cut, sizes.cut)
-          perSession((sfDir, maxDf)) =
-            new java.lang.ref.SoftReference((v._1, v._2))
-          v
-      }
-    }
+    candidateMemo(spark, (sfDir, maxDf))
 
   /** The exploded (doc_id, source, sh8) 3-shingle-hash frame over the
-    * documents table, MEMOIZED PER (session, sfDir) — r18, verdict #5:
-    * THREE stages tokenize + shingle + explode the identical corpus
-    * (the candidate-pair build, dedup_jaccard_prefix,
-    * dedup_jaccard_global — the global variant only re-labels
-    * `source`, a projection over these blocks), and production builds
-    * the shingle table once per corpus snapshot. Same
-    * WeakHashMap+SoftReference discipline as the candidate-pair memo;
-    * Bench times the build as "dedup_shingles_build" (invalidated per
-    * rep) so a shingle-stage regression still shows; ScaleCheck
-    * invalidates per repetition. Shingle HASHES end to end — never
-    * materialize shingle strings: set ops on 64-bit window hashes
-    * equal set ops on the strings (collision odds ~1e-10 for this
-    * corpus), at ~1/3 the CPU and shuffle bytes. */
+    * documents table, MEMOIZED PER (session, sfDir) in a
+    * [[graft.SessionMemo]] — THREE stages tokenize + shingle + explode
+    * the identical corpus (the candidate-pair build,
+    * dedup_jaccard_prefix, dedup_jaccard_global — the global variant
+    * only re-labels `source`, a projection over these blocks), and
+    * production builds the shingle table once per corpus snapshot.
+    * Bench times the build as "dedup_shingles_build". Shingle HASHES
+    * end to end — never materialize shingle strings: set ops on 64-bit
+    * window hashes equal set ops on the strings (collision odds ~1e-10
+    * for this corpus), at ~1/3 the CPU and shuffle bytes. */
   private[graft] def shingleFrame(spark: SparkSession, sfDir: String): DataFrame =
-    shingleMemo.synchronized {
-      var per = shingleMemo.get(spark)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        shingleMemo.put(spark, per)
-      }
-      per.get(sfDir).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = Tables.documentsPar(spark, sfDir)
-            .select(col("doc_id"), col("source"),
-              explode(shingleHashes(tokens(col("text")), 3)).as("sh8"))
-            .cut
-          per(sfDir) = new java.lang.ref.SoftReference(v)
-          v
-      }
-    }
+    shingleMemo(spark, sfDir)
 
-  private val shingleMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String,
-        java.lang.ref.SoftReference[DataFrame]]]()
+  private val shingleMemo = SessionMemo[String, DataFrame]("dedup_shingles") {
+    (spark, sfDir) =>
+      Tables.documentsPar(spark, sfDir)
+        .select(col("doc_id"), col("source"),
+          explode(shingleHashes(tokens(col("text")), 3)).as("sh8"))
+        .cut
+  }
 
-  /** Drop this session's memoized shingle frame (Bench/ScaleCheck:
-    * each timed repetition must pay the full tokenize+explode). */
-  def invalidateShingles(spark: SparkSession): Unit =
-    shingleMemo.synchronized { shingleMemo.remove(spark); () }
+  /** Drop this session's memoized shingle frame. */
+  def invalidateShingles(spark: SparkSession): Unit = shingleMemo.invalidate(spark)
 
   private def computeCandidateInter(spark: SparkSession, sfDir: String,
       maxDf: Int): (DataFrame, DataFrame) = {
@@ -707,43 +666,27 @@ object Dedup {
     clusterLabels(spark, sfDir).orderBy(col("doc_id"))
 
   /** The (doc_id, cluster_id) CC labeling, MEMOIZED PER (session,
-    * sfDir) — the same WeakHashMap+SoftReference discipline as the
-    * candidate-pair memo above, and the same production shape: the
+    * sfDir) in a [[graft.SessionMemo]], the production shape: the
     * labeling is computed once per corpus snapshot and every
     * downstream job reads the label table. SIX queries consume it
     * (dedup_cluster, dedup_cluster_sizes, dedup_canonical,
     * graph_bfs_dist, pipeline_funnel, dedup_cluster_embed); before
     * r17 each re-ran the full hash-min fixpoint per call. Bench times
-    * the build on its own as "dedup_cc_build" (invalidated per rep),
-    * so a CC regression still shows in the output. Unordered; the
-    * registered query applies its own ORDER BY. */
+    * the build on its own as "dedup_cc_build", so a CC regression
+    * still shows in the output. Unordered; the registered query
+    * applies its own ORDER BY. */
   private[graft] def clusterLabels(spark: SparkSession,
-      sfDir: String): DataFrame =
-    clusterLabelsMemo.synchronized {
-      var per = clusterLabelsMemo.get(spark)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        clusterLabelsMemo.put(spark, per)
-      }
-      per.get(sfDir).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = clusterUnordered(candidatePairs(spark, sfDir),
-            Tables.documentsPar(spark, sfDir).select(col("doc_id"))).cut
-          per(sfDir) = new java.lang.ref.SoftReference(v)
-          v
-      }
-    }
+      sfDir: String): DataFrame = clusterLabelsMemo(spark, sfDir)
 
-  private val clusterLabelsMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[String,
-        java.lang.ref.SoftReference[DataFrame]]]()
+  private val clusterLabelsMemo = SessionMemo[String, DataFrame]("dedup_cc") {
+    (spark, sfDir) =>
+      clusterUnordered(candidatePairs(spark, sfDir),
+        Tables.documentsPar(spark, sfDir).select(col("doc_id"))).cut
+  }
 
-  /** Drop this session's memoized CC labeling (Bench/ScaleCheck: each
-    * timed repetition must pay the full fixpoint). */
+  /** Drop this session's memoized CC labeling. */
   def invalidateClusterLabels(spark: SparkSession): Unit =
-    clusterLabelsMemo.synchronized { clusterLabelsMemo.remove(spark); () }
+    clusterLabelsMemo.invalidate(spark)
 
   /** CC over ANY (doc_a, doc_b) edge frame — the session memo's pairs
     * or a [[persistedCandidates]] read-back; `allDocs` supplies the
@@ -800,7 +743,7 @@ object Dedup {
   }
 
   /** The representative pre-cut CC round over the real corpus edges —
-    * what `plans/r18/dedup_cluster_round.txt` dumps and
+    * what `graft.Plans` dumps as `dedup_cluster_round` and
     * PlanQualitySpec pins (round shape: one join + ONE
     * map-side-combined min aggregate, zero Window/Expand). */
   private[graft] def ccRoundFor(spark: SparkSession, sfDir: String): DataFrame = {
@@ -1066,48 +1009,34 @@ object Dedup {
   }
 
   /** The 96-permutation signature table over [[corpusWithPlants]],
-    * MEMOIZED PER (session, sfDir, k) — the same discipline as the
-    * candidate-pair and CC-label memos: three queries (minhash_lsh,
-    * minhash_calibration, lsh_tuning) consume the identical table, and
-    * the production shape builds signatures once per corpus snapshot
-    * ([[persistBandTable]] is the cross-job form). Bench times the
-    * build on its own as "dedup_minhash_sigs_build" (invalidated per
-    * rep) so a signature-stage regression still shows. */
+    * MEMOIZED PER (session, sfDir, k) in a [[graft.SessionMemo]]:
+    * three queries (minhash_lsh, minhash_calibration, lsh_tuning)
+    * consume the identical table, and the production shape builds
+    * signatures once per corpus snapshot ([[persistBandTable]] is the
+    * cross-job form). Bench times the build on its own as
+    * "dedup_minhash_sigs_build" so a signature-stage regression still
+    * shows. */
   private[graft] def minhashSignatures(spark: SparkSession,
-      sfDir: String, k: Int): DataFrame =
-    minhashSigMemo.synchronized {
-      var per = minhashSigMemo.get(spark)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        minhashSigMemo.put(spark, per)
-      }
-      per.get((sfDir, k)).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val ex = corpusWithPlants(spark, sfDir)
-            .select(col("doc_id"),
-              explode(shingleMd5Hashes(col("toks"), 3)).as("h0"))
-          val minAggs =
-            (0 until k).map(i => min(affineHash(col("h0"), i)).as(s"m$i"))
-          val v = ex.groupBy(col("doc_id"))
-            .agg(minAggs.head, minAggs.tail: _*)
-            .select(col("doc_id"),
-              array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-            .cut
-          per((sfDir, k)) = new java.lang.ref.SoftReference(v)
-          v
-      }
-    }
+      sfDir: String, k: Int): DataFrame = minhashSigMemo(spark, (sfDir, k))
 
   private val minhashSigMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Int),
-        java.lang.ref.SoftReference[DataFrame]]]()
+    SessionMemo[(String, Int), DataFrame]("dedup_minhash_sigs") {
+      case (spark, (sfDir, k)) =>
+        val ex = corpusWithPlants(spark, sfDir)
+          .select(col("doc_id"),
+            explode(shingleMd5Hashes(col("toks"), 3)).as("h0"))
+        val minAggs =
+          (0 until k).map(i => min(affineHash(col("h0"), i)).as(s"m$i"))
+        ex.groupBy(col("doc_id"))
+          .agg(minAggs.head, minAggs.tail: _*)
+          .select(col("doc_id"),
+            array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
+          .cut
+    }
 
-  /** Drop this session's memoized signature table (Bench/ScaleCheck:
-    * each timed repetition must pay the full build). */
+  /** Drop this session's memoized signature table. */
   def invalidateMinhashSignatures(spark: SparkSession): Unit =
-    minhashSigMemo.synchronized { minhashSigMemo.remove(spark); () }
+    minhashSigMemo.invalidate(spark)
 
   /** §2#26 MinHash + banded LSH near-dup detection: 96-hash signatures,
     * 32 bands × 3 rows. Signatures are built as 96 codegen'd `min`

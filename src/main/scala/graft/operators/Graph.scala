@@ -80,9 +80,11 @@ object Graph {
           expr("85 * in_sum div 100")).as("rank"))
 
   /** The representative pre-cut pagerank round over the real corpus
-    * edges — what `plans/r18/graph_pagerank_round.txt` dumps and
-    * PlanQualitySpec pins (round shape: ≤1 rank-side exchange into the
-    * join + 1 partial_sum aggregate exchange, zero Expand/Window). */
+    * edges — what `graft.Plans` dumps as `graph_pagerank_round` and
+    * PlanQualitySpec pins (round shape: ≤1 exchange on each join side
+    * + 1 partial_sum aggregate exchange, zero Expand/Window). The edge
+    * side is shuffled on `src` again despite the repartition before its
+    * cut. */
   private[graft] def pagerankRoundFor(spark: SparkSession,
       sfDir: String): DataFrame = {
     val edges = Dedup.candidatePairs(spark, sfDir)
@@ -214,7 +216,7 @@ object Graph {
       .agg(expr("mode(label, true)").as("label"))
 
   /** The representative pre-cut label-prop round over the real corpus
-    * edges — what `plans/r18/graph_label_prop_round.txt` dumps and
+    * edges — what `graft.Plans` dumps as `graph_label_prop_round` and
     * PlanQualitySpec pins (round shape: ONE ObjectHashAggregate pair
     * with a partial mode, no second node-keyed exchange). */
   private[graft] def labelPropRoundFor(spark: SparkSession,

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.Checkpoints.CutOps
 import graft.functions.Fns._
 
@@ -68,56 +68,44 @@ object Similarity {
     * query side is broadcast; ranking is on µ-scaled cosine so
     * cross-engine float noise can't flip ranks.
     *
-    * MEMOIZED PER (session, sfDir, k) — same WeakHashMap+SoftReference
-    * discipline as Dedup's candidate-pair memo (Dedup.scala:86): the
+    * MEMOIZED PER (session, sfDir, k) in a [[graft.SessionMemo]]: the
     * exact top-k is consumed both as the ann_bruteforce_topk query and
     * as recallReport's truth denominator, and re-running the
     * query×corpus scan for the report pays the most expensive ANN
     * stage twice for identical rows. Bench times the build on its own
     * as "ann_truth_build" so a truth-scan regression still shows. */
   def bruteforceTopk(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame =
-    truthMemo.synchronized {
-      var per = truthMemo.get(spark)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        truthMemo.put(spark, per)
-      }
-      per.get((sfDir, k)).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = computeBruteforceTopk(spark, sfDir, k).cut
-          per.put((sfDir, k), new java.lang.ref.SoftReference(v))
-          v
-      }
-    }
+    truthMemo(spark, (sfDir, k))
 
-  private val truthMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Int),
-        java.lang.ref.SoftReference[DataFrame]]]()
+  private val truthMemo = SessionMemo[(String, Int), DataFrame]("ann_truth") {
+    case (spark, (sfDir, k)) => computeBruteforceTopk(spark, sfDir, k).cut
+  }
 
-  /** The built IVF-PQ index memo — same discipline, keyed by every
-    * build parameter (the query path must match how codes were built).
-    * This is the faiss build/search split as a session cache: train +
-    * encode once, serve ann_ivf_pq AND recallReport's ivf_pq rung from
-    * the same checkpointed tables. Bench times the build on its own as
+  /** The built IVF-PQ index memo, keyed by every build parameter (the
+    * query path must match how codes were built). This is the faiss
+    * build/search split as a session cache: train + encode once, serve
+    * ann_ivf_pq AND recallReport's ivf_pq rung from the same
+    * checkpointed tables. Bench times the build on its own as
     * "ann_ivfpq_build". */
   private val indexMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, Int, Int, Int, Int, Boolean),
-        java.lang.ref.SoftReference[IvfPqIndex]]]()
+    SessionMemo[(String, Int, Int, Int, Int, Boolean), IvfPqIndex]("ann_ivfpq") {
+      case (spark, (sfDir, nCells, m, codesPerSub, iters, residual)) =>
+        val raw = computeIvfPqIndex(spark, sfDir, nCells, m, codesPerSub,
+          iters, residual)
+        // cents/cb are checkpointed by their builders; the encoded
+        // inverted index is the expensive leaf consumers re-scan —
+        // materialize it so reuse reads blocks, not the encode plan
+        raw.copy(codesCell = raw.codesCell.cut)
+    }
 
-  /** Drop this session's memoized truth/index frames (Bench's
-    * ann_truth_build / ann_ivfpq_build loops: each timed repetition
-    * must pay the full build, not read checkpoint blocks). */
+  /** Drop this session's memoized truth frames and IVF-PQ indexes. */
   def invalidateMemos(spark: SparkSession): Unit = {
-    truthMemo.synchronized { truthMemo.remove(spark); () }
-    indexMemo.synchronized { indexMemo.remove(spark); () }
+    truthMemo.invalidate(spark)
+    indexMemo.invalidate(spark)
   }
 
   /** The two shared base frames of the ANN family, MEMOIZED PER
-    * (session, sfDir) — the r17 CC-label/signature discipline applied
-    * to the corpus scans (r18, verdict #4): [[corpusCut]] is the
+    * (session, sfDir) in a [[graft.SessionMemo]]: [[corpusCut]] is the
     * (vec_id, label, emb, nrm) frame four queries materialized
     * per-call (ivf_topk, ivf_kmeans, cell_health, cell_split);
     * [[unitCut]] is the L2-normalized (vec_id, emb) frame three more
@@ -125,45 +113,25 @@ object Similarity {
     * recall report's rungs ride the same frames, so one report no
     * longer pays three corpus materializations. Values are identical
     * by construction (same plan, cut once instead of per call); Bench
-    * times the builds as "ann_base_build" with per-rep invalidation,
-    * and ScaleCheck invalidates per repetition — no cross-run
-    * persistence, nothing keyed on testdata paths. */
+    * times the builds as "ann_base_build" — no cross-run persistence,
+    * nothing keyed on testdata paths. */
   private[graft] def corpusCut(spark: SparkSession, sfDir: String): DataFrame =
-    baseMemoized(spark, (sfDir, "corpus"))(corpus(spark, sfDir).cut)
+    baseMemo(spark, (sfDir, "corpus"))
 
   private[graft] def unitCut(spark: SparkSession, sfDir: String): DataFrame =
-    baseMemoized(spark, (sfDir, "unit"))(
+    baseMemo(spark, (sfDir, "unit"))
+
+  private val baseMemo = SessionMemo[(String, String), DataFrame]("ann_base") {
+    case (spark, (sfDir, "corpus")) => corpus(spark, sfDir).cut
+    case (spark, (sfDir, "unit")) =>
       corpus(spark, sfDir).drop("label")
         .select(col("vec_id"),
           transform(col("emb"), x => x / col("nrm")).as("emb"))
-        .cut)
-
-  private val baseMemo =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Map[(String, String),
-        java.lang.ref.SoftReference[DataFrame]]]()
-
-  private def baseMemoized(spark: SparkSession, key: (String, String))(
-      mk: => DataFrame): DataFrame = baseMemo.synchronized {
-    var per = baseMemo.get(spark)
-    if (per == null) {
-      per = scala.collection.mutable.Map.empty
-      baseMemo.put(spark, per)
-    }
-    per.get(key).flatMap(r => Option(r.get())) match {
-      case Some(v) => v
-      case None =>
-        val v = mk
-        per.put(key, new java.lang.ref.SoftReference(v))
-        v
-    }
+        .cut
   }
 
-  /** Drop this session's memoized base frames (Bench's ann_base_build
-    * entry and ScaleCheck: each timed repetition pays the full scan +
-    * materialization). */
-  def invalidateBaseMemos(spark: SparkSession): Unit =
-    baseMemo.synchronized { baseMemo.remove(spark); () }
+  /** Drop this session's memoized base frames. */
+  def invalidateBaseMemos(spark: SparkSession): Unit = baseMemo.invalidate(spark)
 
   /** The raw (un-memoized, un-checkpointed) plan — exposed so
     * plan-shape specs can assert the broadcast join that the memo's
@@ -823,26 +791,7 @@ object Similarity {
   private[operators] def buildIvfPqIndex(spark: SparkSession, sfDir: String,
       nCells: Int = 8, m: Int = 8, codesPerSub: Int = 64, iters: Int = 2,
       residual: Boolean = true): IvfPqIndex =
-    indexMemo.synchronized {
-      var per = indexMemo.get(spark)
-      if (per == null) {
-        per = scala.collection.mutable.Map.empty
-        indexMemo.put(spark, per)
-      }
-      val key = (sfDir, nCells, m, codesPerSub, iters, residual)
-      per.get(key).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val raw = computeIvfPqIndex(spark, sfDir, nCells, m, codesPerSub,
-            iters, residual)
-          // cents/cb are checkpointed by their builders; the encoded
-          // inverted index is the expensive leaf consumers re-scan —
-          // materialize it so reuse reads blocks, not the encode plan
-          val v = raw.copy(codesCell = raw.codesCell.cut)
-          per.put(key, new java.lang.ref.SoftReference(v))
-          v
-      }
-    }
+    indexMemo(spark, (sfDir, nCells, m, codesPerSub, iters, residual))
 
   private def computeIvfPqIndex(spark: SparkSession, sfDir: String,
       nCells: Int, m: Int, codesPerSub: Int, iters: Int,

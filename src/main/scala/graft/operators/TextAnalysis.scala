@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{Checkpoints, Tables}
+import graft.{Checkpoints, SessionMemo, Tables}
 import graft.Checkpoints.CutOps
 import graft.functions.Fns._
 
@@ -688,18 +688,18 @@ object TextAnalysis {
   }
 
   /** Memoized (merge table, final vocab frame) per (session, sfDir,
-    * merges) — bpe_train and bpe_encode share one trained state; same
-    * WeakHashMap/SoftReference discipline as Dedup's candidate memo
-    * (a strong value would pin the session via the DataFrame). */
-  private val bpeMemo = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, Int),
-      java.lang.ref.SoftReference[
-        (Seq[(Long, String, String, String, Long)], DataFrame)]]]()
+    * merges) in a [[graft.SessionMemo]] — bpe_train and bpe_encode
+    * share one trained state. Bench times the build as
+    * "text_bpe_build". */
+  private val bpeMemo =
+    SessionMemo[(String, Int), (Seq[(Long, String, String, String, Long)], DataFrame)](
+      "text_bpe") { case (spark, (sfDir, merges)) =>
+      val (table, vocab) = bpeMergesOf(Tables.documentsPar(spark, sfDir), merges)
+      (table, Checkpoints.cut(vocab))
+    }
 
-  /** Drop the trained-BPE memo (ScaleCheck: each timed repetition
-    * retrains). */
-  def invalidateBpe(spark: SparkSession): Unit =
-    bpeMemo.synchronized { bpeMemo.remove(spark); () }
+  /** Drop the trained-BPE memo, so the next consumer retrains. */
+  def invalidateBpe(spark: SparkSession): Unit = bpeMemo.invalidate(spark)
 
   /** The k-round BPE merge loop over any (doc_id, text) frame — see
     * [[bpeTrain]] for semantics. Returns the merge table rows and the
@@ -761,22 +761,7 @@ object TextAnalysis {
 
   private def bpeMerges(spark: SparkSession, sfDir: String, merges: Int)
       : (Seq[(Long, String, String, String, Long)], DataFrame) =
-    bpeMemo.synchronized {
-      var perSession = bpeMemo.get(spark)
-      if (perSession == null) {
-        perSession = scala.collection.mutable.Map.empty
-        bpeMemo.put(spark, perSession)
-      }
-      perSession.get((sfDir, merges)).flatMap(r => Option(r.get())) match {
-        case Some(v) => v
-        case None =>
-          val v = bpeMergesOf(Tables.documentsPar(spark, sfDir), merges)
-          val pinned = (v._1, Checkpoints.cut(v._2))
-          perSession.put((sfDir, merges),
-            new java.lang.ref.SoftReference(pinned))
-          pinned
-      }
-    }
+    bpeMemo(spark, (sfDir, merges))
 
   /** §2#216 BPE TOKENIZER TRAINING (Sennrich et al. 2016,
     * arXiv:1508.07909) — k full merge rounds, extending #123's single

@@ -30,4 +30,21 @@ class BenchDiffSpec extends AnyFunSuite {
       "f" -> 9.0)  // new query, no baseline
     assert(Bench.regressions(prev, cur) === Map("a" -> (1.0, 2.6)))
   }
+
+  test("compactLine: slowest first, stops at the first misfit, no sentinels, fixed notation") {
+    val long = "x" * 60
+    val entries = Map("big" -> 12345678.9, long -> 9.0, "small" -> 0.5,
+      "tiny" -> 0.0001, "failed" -> -1.0)
+    val line = Bench.compactLine(12345688.4, entries, nErrors = 1, gcMs = 7,
+      sfDir = "sf", cpus = 4, epochMs = 1L, budget = 40)
+    // "big" fits the 40-byte budget, the 60-char name does not, and the
+    // smaller entries after it stay out even though they would fit
+    assert(line.contains(""""queries_in_line":1,"queries":{"big":12345678.90}"""), line)
+    assert(line.contains(""""value":12345688.40,"""), line)
+    assert(line.contains(""""n_queries":5,"""), line)
+    assert(line.contains(""""cpus":4,"""), line)
+    assert(!line.contains("E") && !line.contains("-1"), line)
+    val all = Bench.compactLine(1.0, entries - long, 0, 0, "sf", 4, 1L)
+    assert(all.contains(""""queries":{"big":12345678.90,"small":0.50,"tiny":0.00}"""), all)
+  }
 }

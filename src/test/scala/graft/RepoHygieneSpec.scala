@@ -154,4 +154,17 @@ class RepoHygieneSpec extends AnyFunSuite {
       s"raw localCheckpoint outside Checkpoints.scala: $offenders — " +
         "route through Checkpoints.cut / .cut")
   }
+
+  test("no SoftReference in src/main outside SessionMemo.scala") {
+    // session-scoped reuse goes through graft.SessionMemo, which owns
+    // the weak-session/soft-value discipline and the per-key build
+    // lock; a hand-rolled memo beside it repeats the defects it fixed
+    // (one lock across keys, a build Bench and ScaleCheck never see)
+    val offenders = scalaFiles("src/main")
+      .filterNot(_.getFileName.toString == "SessionMemo.scala")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("SoftReference"))
+    assert(offenders.isEmpty,
+      s"SoftReference outside SessionMemo.scala: $offenders — use graft.SessionMemo")
+  }
 }

@@ -226,7 +226,7 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(store.get() === None)
     // ...and beside a parseable one it does not take part in the max
     in.addData(resolvedAt(30, "not json"), resolvedAt(40, """{"other": "40.0"}"""),
-      resolvedAt(12))
+      resolvedAt(50, """{"resolved": "soon"}"""), resolvedAt(12))
     q.processAllAvailable(); q.stop()
     assert(store.get() === Some("12"))
     assert(InMemoryQueue.messages(qname).size === 1)

@@ -839,4 +839,39 @@ class PlanQualitySpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin") && !plan.contains("ShuffledHashJoin"),
       s"audience pair stage shuffled a join:\n$plan")
   }
+
+  /** The plan AQE ran (its initial plan is printed after it). */
+  private def finalPlanOf(df: DataFrame): String =
+    planOf(df).split("== Initial Plan ==")(0)
+
+  private def lines(plan: String, node: String): Int =
+    plan.linesIterator.count(_.contains(node))
+
+  test("CC round: one join + one map-side-combined min aggregate, no Window/Expand") {
+    val plan = finalPlanOf(Dedup.ccRoundFor(spark, sf))
+    assert(lines(plan, "Join ") === 1, s"CC round joins more than once:\n$plan")
+    assert(lines(plan, "partial_min(") === 1 && lines(plan, "HashAggregate(") === 2,
+      s"CC round is not ONE partial+final min aggregate:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Expand"),
+      s"Window/Expand in the CC round:\n$plan")
+  }
+
+  test("pagerank round: one exchange per join side + one partial_sum exchange") {
+    val plan = finalPlanOf(Graph.pagerankRoundFor(spark, sf))
+    assert(lines(plan, "Exchange hashpartitioning(src") <= 2,
+      s"pagerank round shuffles a join side more than once:\n$plan")
+    assert(lines(plan, "Exchange hashpartitioning(doc_id") === 1 &&
+        lines(plan, "partial_sum(") === 1,
+      s"pagerank round is not ONE partial_sum aggregate exchange:\n$plan")
+    assert(!plan.contains("Window") && !plan.contains("Expand"),
+      s"Window/Expand in the pagerank round:\n$plan")
+  }
+
+  test("label-prop round: one partial/final mode pair, one node-keyed exchange") {
+    val plan = finalPlanOf(Graph.labelPropRoundFor(spark, sf))
+    assert(lines(plan, "ObjectHashAggregate(") === 2 && lines(plan, "partial_mode(") === 1,
+      s"label-prop round is not ONE ObjectHashAggregate pair:\n$plan")
+    assert(lines(plan, "Exchange hashpartitioning(doc_id") === 1,
+      s"label-prop round has a second node-keyed exchange:\n$plan")
+  }
 }
