@@ -1,67 +1,45 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 
 /** Plan dumper for the optimization rounds: writes
-  * `.explain("formatted")` of each named query (or every declared
-  * query) to `<outDir>/<name>_<tag>.txt`, so plan-shape claims in
-  * OPTIMIZATION_r*.md are checkable without running Spark.
+  * `.explain("formatted")` of each declared query, and of one pre-cut
+  * round of each iterative fixpoint, to `<outDir>/<name>_<tag>.txt`, so
+  * plan-shape claims in OPTIMIZATION_r*.md are checkable without
+  * running Spark.
   *
-  * Usage: runMain graft.Plans <sfDir> <outDir> <tag> [q1,q2,...]
+  * Usage: runMain graft.Plans <sfDir> <outDir> <tag>
+  * (SPARK_GRAFT_ONLY=q1,q2,... dumps only those, see Harness.select).
   *
-  * The session mirrors Bench's exactly (same master/shuffle
-  * partitions/AQE) so the dumped initial plans are the ones the bench
-  * executes. Note: AQE plans print `isFinalPlan=false` — these are
-  * pre-execution shapes; Exchange counts and join strategies at this
-  * stage are what the pins assert.
+  * The session is Bench's (Harness.session) so the dumped initial plans
+  * are the ones the bench executes. Note: AQE plans print
+  * `isFinalPlan=false` — these are pre-execution shapes; Exchange
+  * counts and join strategies at this stage are what the pins assert.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0)
-    val outDir = args(1)
-    val tag = args(2)
-    val only: Option[Set[String]] =
-      if (args.length > 3) Some(args(3).split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val Array(sfDir, outDir, tag) = args
+    // Pre-cut ROUND plans for the iterative fixpoints (r18, verdict
+    // #8): the registered queries' final plans sit past the per-round
+    // lineage cuts, so the one-exchange round shape was narrated, not
+    // committed. These dump ONE representative round each, uncut.
+    val rounds: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "graph_label_prop_round" -> (graft.operators.Graph.labelPropRoundFor _),
+      "graph_pagerank_round" -> (graft.operators.Graph.pagerankRoundFor _),
+      "dedup_cluster_round" -> (graft.operators.Dedup.ccRoundFor _))
+    val all = SparkEntry.queries ++ rounds
+    val keep = Harness.select(all.keySet)
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    val sel = SparkEntry.queries.filter { case (k, _) => only.forall(_.contains(k)) }
-    sel.foreach { case (name, fn) =>
+    all.filter(e => keep(e._1)).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(
+        val txt = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
       } catch { case e: Throwable =>
         System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
     }
-    // Pre-cut ROUND plans for the iterative fixpoints (r18, verdict
-    // #8): the registered queries' final plans sit past the per-round
-    // lineage cuts, so the one-exchange round shape was narrated, not
-    // committed. These dump ONE representative round each, uncut.
-    val rounds: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] = Map(
-      "graph_label_prop_round" -> ((s, d) => graft.operators.Graph.labelPropRoundFor(s, d)),
-      "graph_pagerank_round" -> ((s, d) => graft.operators.Graph.pagerankRoundFor(s, d)),
-      "dedup_cluster_round" -> ((s, d) => graft.operators.Dedup.ccRoundFor(s, d)))
-    rounds.filter { case (k, _) => only.forall(_.contains(k)) }
-      .foreach { case (name, fn) =>
-        try {
-          val txt = fn(spark, sfDir).queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          Files.writeString(Paths.get(s"$outDir/${name}_$tag.txt"), txt)
-        } catch { case e: Throwable =>
-          System.err.println(s"[plans] $name failed: ${e.getMessage}")
-        }
-      }
     spark.stop()
   }
 }

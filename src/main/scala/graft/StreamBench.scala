@@ -93,19 +93,12 @@ object StreamBench {
   }
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val rows = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROWS", "200000").toInt
     val batches = sys.env.getOrElse("SPARK_GRAFT_STREAM_BATCHES", "20").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_STREAM_REPS", "2").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark = Harness.session(
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val s: SparkSession = spark
 

@@ -318,11 +318,7 @@ object Changefeed {
   /** §2#3 ChangePayload envelope {"table","key","value"} published to the
     * queue (reference src/model.rs:74-91, src/main.rs:223-231). */
   def envelope(spark: SparkSession, sfDir: String): DataFrame =
-    changeRows(spark, sfDir).select(
-      col("event_id"),
-      concat(lit("{\"table\":\""), col("tbl"),
-        lit("\",\"key\":\""), col("key"),
-        lit("\",\"value\":"), col("value"), lit("}")).as("payload"))
+    changeRows(spark, sfDir).select(col("event_id"), payloadCol.as("payload"))
       .orderBy(col("event_id"))
 
   /** §2#4 latest resolved cursor — what the cursor store holds after the
@@ -330,8 +326,7 @@ object Changefeed {
     * parsed back out of the resolved-row JSON like src/main.rs:233-238. */
   def resolvedCursor(spark: SparkSession, sfDir: String): DataFrame =
     resolvedRows(spark, sfDir)
-      .select(substring_index(get_json_object(col("value"), "$.resolved"), ".", 1)
-        .cast("long").as("resolved_us"))
+      .select(resolvedUsCol.as("resolved_us"))
       .agg(max(col("resolved_us")).as("max_resolved_us"),
         count(lit(1)).as("n_resolved"))
 

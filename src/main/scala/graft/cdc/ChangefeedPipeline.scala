@@ -3,7 +3,6 @@ package graft.cdc
 import java.nio.charset.StandardCharsets.UTF_8
 import scala.concurrent.Await
 import scala.concurrent.duration._
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -283,16 +282,6 @@ object ChangefeedPipeline {
       } finally st.close()
     }
   }
-
-  /** Publish a batch of payload rows to a FileQueue: one atomic JSONL
-    * file per (batch, partition) → idempotent, effectively-once. */
-  def publishToFileQueue(payloads: DataFrame, batchId: Long, fq: FileQueue): Unit =
-    payloads.foreachPartition { (it: Iterator[Row]) =>
-      val w = fq.writerFor(batchId, TaskContext.getPartitionId())
-      it.foreach(r => w.write(r.getString(0)))
-      w.commit()
-      ()
-    }
 }
 
 /** Largest value added across a job's tasks; zero (nothing added) reads

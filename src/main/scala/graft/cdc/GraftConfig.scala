@@ -92,13 +92,6 @@ final case class GraftConfig(
       copy(queue = spec).newQueue()
     }
 
-  /** File queues need per-batch writers (not per-record publish) — the
-    * pipeline dispatches on this. */
-  def newFileQueue(): Option[FileQueue] = split(queue, "queue") match {
-    case ("file", dir) => Some(new FileQueue(dir))
-    case _ => None
-  }
-
   /** The JDBC URL behind a database-backed cursor-store spec, if the
     * spec names one: `jdbc:<url-rest>` carries it inline; the
     * reference's bare `cockroachdb` value reads it from

@@ -1,6 +1,5 @@
 package graft.cdc
 
-import java.io.{BufferedWriter, File, FileWriter}
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.collection.concurrent.TrieMap
 import scala.jdk.CollectionConverters._
@@ -46,28 +45,4 @@ class ChangefeedLogQueue(val dir: String) extends MessageQueue {
   override def publish(data: Array[Byte]): Unit =
     throw new UnsupportedOperationException(
       "ChangefeedLogQueue publishes whole micro-batches via the DSv2 sink")
-}
-
-/** File-backed queue: one JSONL file per (batch, partition), written
-  * atomically (tmp + rename). Re-running a batch overwrites the same
-  * files → idempotent publish, which upgrades Structured Streaming's
-  * at-least-once foreachBatch into effectively-once delivery. */
-class FileQueue(val dir: String) extends Serializable {
-  def writerFor(batchId: Long, partitionId: Int): FileQueueWriter =
-    new FileQueueWriter(dir, batchId, partitionId)
-}
-
-class FileQueueWriter(dir: String, batchId: Long, partitionId: Int) {
-  new File(dir).mkdirs()
-  private val target = new File(dir, f"batch-$batchId%05d-part-$partitionId%05d.jsonl")
-  private val tmp = new File(dir, target.getName + ".tmp")
-  private val w = new BufferedWriter(new FileWriter(tmp))
-  private var n = 0L
-  def write(line: String): Unit = { w.write(line); w.write("\n"); n += 1 }
-  /** Atomic commit; empty partitions leave no file behind. */
-  def commit(): Long = {
-    w.close()
-    if (n > 0) { tmp.renameTo(target); () } else { tmp.delete(); () }
-    n
-  }
 }

@@ -698,13 +698,8 @@ object Dedup {
     * memo materializes (consumers aggregate/join, so the sort would
     * be dead weight under them). */
   private def clusterUnordered(edges: DataFrame, allDocs: DataFrame): DataFrame = {
-    val bidir = edges
-      .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))
-        .select(col("doc_a"), col("doc_b")))
-      .transform(graft.Checkpoints.cut)
-    val nodes = bidir.select(col("doc_a").as("doc_id")).distinct()
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("lab"))
-      .transform(graft.Checkpoints.cut)
+    val (bidir, labels0) = ccSetup(edges)
+    var labels = labels0
     val maxRounds = 50
     var changed = 1L
     var rounds = 0
@@ -747,15 +742,21 @@ object Dedup {
     * PlanQualitySpec pins (round shape: one join + ONE
     * map-side-combined min aggregate, zero Window/Expand). */
   private[graft] def ccRoundFor(spark: SparkSession, sfDir: String): DataFrame = {
-    val edges = candidatePairs(spark, sfDir)
+    val (bidir, labels) = ccSetup(candidatePairs(spark, sfDir))
+    ccRound(bidir, labels)
+  }
+
+  /** What every hash-min round reads, cut once: the bidirected
+    * `(doc_a, doc_b)` edge frame and round 1's labels (each node its
+    * own). */
+  private def ccSetup(edges: DataFrame): (DataFrame, DataFrame) = {
     val bidir = edges
       .unionByName(edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))
         .select(col("doc_a"), col("doc_b")))
       .transform(graft.Checkpoints.cut)
     val nodes = bidir.select(col("doc_a").as("doc_id")).distinct()
-    val labels = nodes.select(col("doc_id"), col("doc_id").as("lab"))
-      .transform(graft.Checkpoints.cut)
-    ccRound(bidir, labels)
+    (bidir, nodes.select(col("doc_id"), col("doc_id").as("lab"))
+      .transform(graft.Checkpoints.cut))
   }
 
   /** §2#208 TWO-PHASE STAR-CONTRACTION connected components (Kiveris,

@@ -36,24 +36,32 @@ object Graph {
   /** PageRank over ANY (doc_a, doc_b) edge frame — the session memo's
     * pairs or a [[Dedup.persistedCandidates]] read-back. */
   def pagerankFrom(edges: DataFrame, iters: Int = 6): DataFrame = {
-    val bidir = edges.unionByName(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val deg = bidir.groupBy(col("doc_a").as("src"))
-      .agg(count(lit(1)).as("out_deg"))
-    // hash-partition the (big) edge side by the join key ONCE — the
-    // checkpoint preserves the partitioning, so every round's join
-    // shuffles only the rank frame (|nodes| rows), never the edges
-    val edgesDeg = bidir.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .join(deg, "src")
-      .repartition(col("src"))
-      .transform(graft.Checkpoints.cut)
-    val nodes = deg.select(col("src").as("doc_id")).transform(graft.Checkpoints.cut)
-    var ranks = nodes.select(col("doc_id"), lit(prScale).as("rank"))
+    val (edgesDeg, ranks0) = pagerankSetup(edges)
+    var ranks = ranks0
     for (_ <- 1 to iters) {
       ranks = pagerankRound(edgesDeg, ranks).transform(graft.Checkpoints.cut)
     }
     ranks.select(col("doc_id"), col("rank").as("rank_e9"))
       .orderBy(col("doc_id"))
+  }
+
+  /** What every pagerank round reads, cut once: the degree-annotated
+    * edge frame (`src`, `dst`, `out_deg`) and round 1's uniform ranks.
+    * The edges are repartitioned on `src` before their cut, yet AQE's
+    * final plan of each round still shuffles them on `src` again
+    * (PlanQualitySpec allows one exchange per join side), so every
+    * round moves |edges| rows, not only the rank frame. */
+  private def pagerankSetup(edges: DataFrame): (DataFrame, DataFrame) = {
+    val bidir = edges.unionByName(
+      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+    val deg = bidir.groupBy(col("doc_a").as("src"))
+      .agg(count(lit(1)).as("out_deg"))
+    val edgesDeg = bidir.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .join(deg, "src")
+      .repartition(col("src"))
+      .transform(graft.Checkpoints.cut)
+    val nodes = deg.select(col("src").as("doc_id")).transform(graft.Checkpoints.cut)
+    (edgesDeg, nodes.select(col("doc_id"), lit(prScale).as("rank")))
   }
 
   private val prScale = 1000000000L
@@ -87,17 +95,8 @@ object Graph {
     * cut. */
   private[graft] def pagerankRoundFor(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val edges = Dedup.candidatePairs(spark, sfDir)
-    val bidir = edges.unionByName(
-      edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-    val deg = bidir.groupBy(col("doc_a").as("src"))
-      .agg(count(lit(1)).as("out_deg"))
-    val edgesDeg = bidir.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .join(deg, "src")
-      .repartition(col("src"))
-      .transform(graft.Checkpoints.cut)
-    val nodes = deg.select(col("src").as("doc_id")).transform(graft.Checkpoints.cut)
-    pagerankRound(edgesDeg, nodes.select(col("doc_id"), lit(prScale).as("rank")))
+    val (edgesDeg, ranks) = pagerankSetup(Dedup.candidatePairs(spark, sfDir))
+    pagerankRound(edgesDeg, ranks)
   }
 
   /** §2#133 k-core decomposition by iterative peeling: repeatedly drop
@@ -177,14 +176,8 @@ object Graph {
 
   /** Core of [[labelProp]] over any unique `(doc_a < doc_b)` edge list. */
   def labelPropFrom(edges: DataFrame, iters: Int = 8): DataFrame = {
-    val bidir = edges.unionByName(
-        edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .repartition(col("src"))
-      .transform(graft.Checkpoints.cut)
-    val nodes = bidir.select(col("src").as("doc_id")).distinct()
-      .transform(graft.Checkpoints.cut)
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("label"))
+    val (bidir, labels0) = labelPropSetup(edges)
+    var labels = labels0
     for (_ <- 1 to iters) {
       labels = labelPropRound(bidir, labels).transform(graft.Checkpoints.cut)
     }
@@ -192,6 +185,21 @@ object Graph {
     labels.join(sizes, "label")
       .select(col("doc_id"), col("label").as("community"), col("community_size"))
       .orderBy(col("doc_id"))
+  }
+
+  /** What every label-prop round reads, cut once: the bidirected
+    * `(src, dst)` edge frame and round 1's labels (each node its own).
+    * As in [[pagerankSetup]], AQE's final round plan still shuffles the
+    * edges on `src` despite the repartition before their cut. */
+  private def labelPropSetup(edges: DataFrame): (DataFrame, DataFrame) = {
+    val bidir = edges.unionByName(
+        edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
+      .repartition(col("src"))
+      .transform(graft.Checkpoints.cut)
+    val nodes = bidir.select(col("src").as("doc_id")).distinct()
+      .transform(graft.Checkpoints.cut)
+    (bidir, nodes.select(col("doc_id"), col("doc_id").as("label")))
   }
 
   /** ONE label-propagation round, pre-cut — the body the loop
@@ -221,15 +229,8 @@ object Graph {
     * with a partial mode, no second node-keyed exchange). */
   private[graft] def labelPropRoundFor(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val edges = Dedup.candidatePairs(spark, sfDir)
-    val bidir = edges.unionByName(
-        edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .repartition(col("src"))
-      .transform(graft.Checkpoints.cut)
-    val nodes = bidir.select(col("src").as("doc_id")).distinct()
-      .transform(graft.Checkpoints.cut)
-    labelPropRound(bidir, nodes.select(col("doc_id"), col("doc_id").as("label")))
+    val (bidir, labels) = labelPropSetup(Dedup.candidatePairs(spark, sfDir))
+    labelPropRound(bidir, labels)
   }
 
   /** §2#122 triangle counting over the near-dup candidate graph, with

@@ -522,9 +522,8 @@ class ChangefeedMicroBatchStream(dir: String, startCursorUs: Option[Long],
   * for streaming, `b<queryId>p<partition>` for batch — so a re-executed
   * task (failure retry, speculation) atomically REPLACES the identical
   * segment instead of appending a duplicate: Structured Streaming's
-  * at-least-once task execution becomes effectively-once on disk, the
-  * same trick FileQueue plays (MessageQueue.scala). Driver-side
-  * commit/abort are no-ops — segments are already atomically visible or
+  * at-least-once task execution becomes effectively-once on disk.
+  * Driver-side commit/abort are no-ops — segments are already atomically visible or
   * not at all. Closes the CDC loop Spark-natively: a changefeed log can
   * be relayed `readStream → transform → writeStream` into another log
   * with no broker dependency (reference src/queues.rs:44-64 is the

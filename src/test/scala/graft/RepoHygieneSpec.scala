@@ -167,4 +167,18 @@ class RepoHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"SoftReference outside SessionMemo.scala: $offenders — use graft.SessionMemo")
   }
+
+  test("no SparkSession.builder in src/main outside Harness.scala and GraftMain.scala") {
+    // the harness mains share one session shape (Harness.session); a
+    // builder of their own drifts from it, as the 4-vs-32 default
+    // SPARK_GRAFT_CPUS split did. GraftMain is the spark-submit app,
+    // whose master and resources come from the submit. Scaladoc usage
+    // examples (GraftExtensions) are not code.
+    val offenders = scalaFiles("src/main")
+      .filterNot(p => Set("Harness.scala", "GraftMain.scala")(p.getFileName.toString))
+      .filter(p => Files.readAllLines(p).asScala
+        .exists(l => l.contains("SparkSession.builder") && !l.trim.startsWith("*")))
+    assert(offenders.isEmpty,
+      s"SparkSession.builder outside Harness.scala/GraftMain.scala: $offenders — use graft.Harness.session")
+  }
 }

@@ -122,17 +122,7 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(resolved.exists(_ % 3600000000L != 0))
   }
 
-  test("file queue writes idempotent per-batch JSONL; cursor store survives restart") {
-    val dir = Files.createTempDirectory("graft-fq").toString
-    val fq = new FileQueue(dir)
-    val payloads = Seq("{\"a\":1}", "{\"a\":2}", "{\"a\":3}").toDF("payload")
-    ChangefeedPipeline.publishToFileQueue(payloads, 7L, fq)
-    ChangefeedPipeline.publishToFileQueue(payloads, 7L, fq) // re-run same batch
-    import scala.jdk.CollectionConverters._
-    val lines = Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
-      .flatMap(p => Files.readAllLines(p).asScala).toSeq
-    assert(lines.sorted === Seq("{\"a\":1}", "{\"a\":2}", "{\"a\":3}"))
-
+  test("file cursor store survives restart") {
     val curPath = Files.createTempDirectory("graft-cur2").resolve("c").toString
     val s1 = new FileCursorStore(curPath)
     assert(s1.get() === None)

@@ -41,10 +41,10 @@ class ConfigMetricsSpec extends SparkSuite {
       cursorStore = "file:" + Files.createTempDirectory("graft-cfg").resolve("cur"))
     assert(c.newQueue().isInstanceOf[InMemoryQueue])
     assert(c.newCursorStore().isInstanceOf[FileCursorStore])
-    assert(c.newFileQueue().isEmpty)
-    assert(GraftConfig(table = "t", queue = "file:/tmp/fq").newFileQueue().isDefined)
     intercept[IllegalArgumentException](
       GraftConfig(table = "t", queue = "rabbitmq:amqp://x").newQueue())
+    intercept[IllegalArgumentException](
+      GraftConfig(table = "t", queue = "file:/tmp/fq").newQueue())
     // the reference's AMQP path (AMQP_ADDR / --queue amqp://...) maps
     // to the built-in 0-9-1 publisher; parse is eager, connect is lazy
     assert(GraftConfig(table = "t", queue = "amqp://u:p@h:5672/q")
