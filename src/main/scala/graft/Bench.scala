@@ -55,6 +55,11 @@ object Bench {
       s""""sf":${Harness.quote(sfDir)},"cpus":$cpus,"epoch_ms":$epochMs}"""
   }
 
+  /** One query's `io` record: its first timed rep's [[IoSnapshot]]
+    * delta, as JSON. */
+  def ioRecord(s: IoSnapshot): String =
+    s"""{"shuffle_read_b":${s.shuffleReadB},"shuffle_write_b":${s.shuffleWriteB},"spill_b":${s.spillB},"peak_exec_mem_b":${s.peakExecMemB},"input_read_b":${s.inputReadB},"codegen_compiles":${s.codegenCompiles}}"""
+
   /** Times the rebuild of every key `memo` holds for this session, with
     * the memos it reads still warm: per key the min of three builds,
     * each right after the memo alone is invalidated; returns the sum. */
@@ -95,10 +100,13 @@ object Bench {
     // Best-of-3: the host has heavy exogenous load spikes; min-of-n is
     // the standard estimator for the query's actual cost under noise.
     // I/O metrics (r13 verdict #1 — shuffle bytes MEASURED, not argued)
-    // come from the FIRST timed rep only: bytes moved are
-    // plan-deterministic, so one rep is exact where wall time needs
-    // min-of-n; snapshot deltas isolate each query because queries run
-    // sequentially on this thread.
+    // come from the FIRST timed rep only; snapshot deltas isolate each
+    // query because queries run sequentially on this thread. One rep is
+    // a sample, not an exact figure: the same plan's shuffle bytes can
+    // differ between runs (dedup_semantic's 1x read measured 232,130
+    // and 232,861 bytes at sf0.001). Its codegen compiles are the
+    // generated classes the warm-up compiled but Spark's codegen cache
+    // no longer held.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val listener = ShuffleMetrics.install(spark)
     val io = scala.collection.mutable.LinkedHashMap.empty[String, IoSnapshot]
@@ -141,10 +149,10 @@ object Bench {
     // Per-query data movement (first-rep deltas): shuffle read/write
     // bytes, spill, peak single-task execution memory — the numbers a
     // 100x scale-up is predicted from (plan shape says a shuffle
-    // exists; these say how many bytes it moves).
-    val ioJson = io.map { case (k, s) =>
-      s"""${Harness.quote(k)}:{"shuffle_read_b":${s.shuffleReadB},"shuffle_write_b":${s.shuffleWriteB},"spill_b":${s.spillB},"peak_exec_mem_b":${s.peakExecMemB},"input_read_b":${s.inputReadB}}"""
-    }.mkString("{", ",", "}")
+    // exists; these say how many bytes it moves) — and codegen
+    // compiles, the fixed per-run cost of a codegen-cache miss.
+    val ioJson = io.map { case (k, s) => s"${Harness.quote(k)}:${ioRecord(s)}" }
+      .mkString("{", ",", "}")
     val total = entries.values.filter(_ >= 0).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errJson,"n_errors":${errors.size},"gc_ms":$gcTotalMs,"io":$ioJson,"sf":${Harness.quote(sfDir)},"epoch_ms":${System.currentTimeMillis()}}"""
     // Persist the FULL per-query record in-repo: the round driver

@@ -2,12 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import graft.functions.{DotProduct, TopKDistinctLongs}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import graft.functions.Registry
 
 /** SparkSessionExtensions entry point: registers graft's native
-  * expressions at session build time, so a user can enable the whole
-  * library with
+  * expressions ([[Registry.functions]]) at session build time, so a
+  * user can enable the whole library with
   *
   *   SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
   *   // or: --conf spark.sql.extensions=graft.GraftExtensions
@@ -18,17 +18,10 @@ import graft.functions.{DotProduct, TopKDistinctLongs}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk_vals"),
-      new ExpressionInfo(classOf[TopKDistinctLongs].getName, "graft_topk_vals"),
-      (exprs: Seq[Expression]) =>
-        TopKDistinctLongs(exprs(0),
-          exprs(1).eval(null).asInstanceOf[Number].intValue())
-          .toAggregateExpression()))
+    Registry.functions.foreach { case (name, cls, builder) =>
+      ext.injectFunction(
+        (new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder))
+    }
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // rewrite `row_number().over(...) <= k` window top-k into the

@@ -324,9 +324,12 @@ object ScaleCheck {
     // JIT/codegen warmup on the small side only.
     ops.foreach(run(_, x1Dir, 1).count())
 
-    // Shuffle BYTES measured alongside wall time (r13 verdict #1):
-    // bytes are plan-deterministic, so the first rep's listener delta
-    // is exact; wall time still takes min-of-reps.
+    // Shuffle BYTES measured alongside wall time (r13 verdict #1), from
+    // the first rep's listener delta; wall time takes min-of-reps. The
+    // bytes are one sample, not plan-exact: dedup_semantic's 1x shuffle
+    // read measured 232,130 and 232,861 bytes in two runs of the same
+    // call at sf0.001 (the 2x side read 440,332 both times), so its
+    // shuffle ratio moves a little from run to run.
     val listener = ShuffleMetrics.install(spark)
 
     def measure(dir: String,

@@ -2,6 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.LongAdder
 import org.apache.spark.{GraftListenerShim, SparkContext}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -24,13 +25,18 @@ import org.apache.spark.sql.SparkSession
   * - `inputReadB`: bytes read from storage (task inputMetrics) — the
   *   pushdown story in numbers: a projection that should prune
   *   columns, or a filter that should prune partitions/row groups,
-  *   shows up here as bytes that were or weren't read. */
+  *   shows up here as bytes that were or weren't read.
+  * - `codegenCompiles`: Janino compilations of generated classes
+  *   (Spark's `CodegenMetrics` compile-time histogram count, JVM-wide)
+  *   — a query whose plans miss Spark's codegen cache pays them on
+  *   every run, not once. */
 case class IoSnapshot(shuffleReadB: Long, shuffleWriteB: Long,
-    spillB: Long, peakExecMemB: Long, inputReadB: Long = 0L) {
+    spillB: Long, peakExecMemB: Long, inputReadB: Long = 0L,
+    codegenCompiles: Long = 0L) {
   def -(o: IoSnapshot): IoSnapshot =
     IoSnapshot(shuffleReadB - o.shuffleReadB, shuffleWriteB - o.shuffleWriteB,
       spillB - o.spillB, math.max(peakExecMemB, o.peakExecMemB),
-      inputReadB - o.inputReadB)
+      inputReadB - o.inputReadB, codegenCompiles - o.codegenCompiles)
 }
 
 /** SparkListener accumulating task-level I/O metrics. One instance is
@@ -63,7 +69,8 @@ class ShuffleMetricsListener extends SparkListener {
     * work; a max is not delta-able and must be reset). */
   def snapshot(sc: SparkContext, resetPeak: Boolean = true): IoSnapshot = {
     GraftListenerShim.drainListenerBus(sc)
-    val s = IoSnapshot(read.sum(), write.sum(), spill.sum(), peak, input.sum())
+    val s = IoSnapshot(read.sum(), write.sum(), spill.sum(), peak, input.sum(),
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount)
     if (resetPeak) peak = 0L
     s
   }

@@ -72,13 +72,11 @@ object Fns {
       sequence(lit(1), greatest(size(words) - lit(n - 1), lit(1))),
       i => xxhash64((0 until n).map(j => try_element_at(words, i + lit(j))): _*))
 
-  /** Per-element seeded hash for MinHash: xxhash64(value, seed). The
-    * k-wide signature itself is built as k codegen'd `min` aggregates
-    * over exploded shingles (see Dedup.minhashLsh) — far faster than a
-    * per-row interpreted higher-order fold. Kept for the STREAMING
-    * admission path (signatures never leave the in-state registry, so
-    * replayability buys nothing there); the batch MinHash family below
-    * is the oracle-replayable one. */
+  /** Per-element seeded hash for MinHash: xxhash64(value, seed). Kept
+    * for the STREAMING admission path (signatures never leave the
+    * in-state registry, so replayability buys nothing there); the
+    * batch MinHash family below is the oracle-replayable one, and its
+    * k-wide signature is one native per-row loop ([[minhashSig]]). */
   def seededHash(c: Column, seed: Int): Column = xxhash64(c, lit(seed))
 
   /** Top-60-bit md5 of a column as a positive BIGINT — the
@@ -128,6 +126,14 @@ object Fns {
   def minhashB(i: Int): Long = ((1099511628211L % minhashP) * (i + 1)) % minhashP
   def affineHash(h: Column, i: Int): Column =
     pmod(lit(minhashA(i)) * h + lit(minhashB(i)), lit(minhashP))
+
+  /** The k-permutation MinHash signature of an array<bigint> of
+    * shingle hashes: element i is the min of [[affineHash]](h, i) over
+    * the array, computed per row by the native [[MinHashSignature]]
+    * loop (requires Registry.ensure(spark) once per session). Null for
+    * a null, empty or all-null array. */
+  def minhashSig(hashes: Column, k: Int): Column =
+    call_function("graft_minhash_sig", hashes, lit(k))
 
   /** Per-bit ±1 SimHash vote of a 64-bit hash column (bit j). Summed
     * per doc as 64 codegen'd aggregates (see Dedup.simhash). */

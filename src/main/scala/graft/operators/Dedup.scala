@@ -551,10 +551,10 @@ object Dedup {
     * machinery as [[minhashLsh]], computed once over the union so
     * both sides agree bit-for-bit. */
   def incrementalMinhash(spark: SparkSession, sfDir: String): DataFrame = {
-    // signatures over the UNION: min-aggs are per-doc and
-    // order-independent, so these agree bit-for-bit with signatures
-    // computed per side (what makes the persisted-band path below
-    // exactly equivalent)
+    // signatures over the UNION: each is a per-doc fold, independent
+    // of which other docs share the frame, so these agree bit-for-bit
+    // with signatures computed per side (what makes the persisted-band
+    // path below exactly equivalent)
     val (sigs, banded) = minhashBands(Tables.documentsPar(spark, sfDir))
     incrementalMinhashAgainst(
       Tables.documentsPar(spark, sfDir).where(col("doc_id") % 5 === 4)
@@ -570,24 +570,48 @@ object Dedup {
     * the incremental path, the persisted artifact, and the full
     * pairwise join all share one bit-identical definition. */
   private[operators] def minhashBands(docs: DataFrame): (DataFrame, DataFrame) = {
-    val k = 96; val bands = 32; val rows = k / bands
-    // same replayable md5+affine family as [[minhashLsh]] (r11) — the
-    // persisted artifact, the incremental probe, and the oracle all
-    // reproduce identical signatures
-    val ex = docs.select(col("doc_id"),
-      explode(shingleMd5Hashes(tokens(col("text")), 3)).as("h0"))
-    val minAggs = (0 until k).map(i => min(affineHash(col("h0"), i)).as(s"m$i"))
-    val sigs = ex.groupBy(col("doc_id"))
-      .agg(minAggs.head, minAggs.tail: _*)
-      .select(col("doc_id"), array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-      .cut
-    val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",",
-            slice(col("sig"), b * lit(rows) + 1, lit(rows))), b))))
-      .toDF("doc_id", "band", "bandhash")
-    (sigs, banded)
+    val sigs = minhashSigs(docs.select(col("doc_id"), tokens(col("text")).as("toks")))
+    (sigs, lshBands(sigs))
   }
+
+  /** The k-permutation MinHash signature table of a (doc_id, toks)
+    * frame — THE signature builder every MinHash consumer shares (the
+    * [[minhashSignatures]] memo, [[minhashBands]], fuzzy
+    * decontamination). One row (doc_id, sig) per doc that has a
+    * shingle hash, built as ONE narrow projection: the native per-row
+    * [[graft.functions.MinHashSignature]] loop over the doc's distinct
+    * md5 3-shingle hashes, so the table keeps the scan's partitioning
+    * (no explode, no aggregate, no shuffle on doc_id), then cut.
+    * Replayable md5+affine family (r11): the DuckDB oracle
+    * regenerates the same a_i/b_i from range(k) and hash-gates every
+    * consumer. The null filter (a doc without a shingle hash has no
+    * signature) sits after the cut: before it, the optimizer pushes
+    * `sig IS NOT NULL` below the projection as a second evaluation of
+    * the whole signature. */
+  private[operators] def minhashSigs(docs: DataFrame, k: Int = 96): DataFrame = {
+    graft.functions.Registry.ensure(docs.sparkSession)
+    docs.select(col("doc_id"),
+        minhashSig(shingleMd5Hashes(col("toks"), 3), k).as("sig"))
+      .cut
+      .where(col("sig").isNotNull)
+  }
+
+  /** Raw LSH band keys of a (doc_id, sig) table: one (doc_id, band,
+    * bkey) row per band, bkey = the band's `rows` signature values
+    * comma-joined — the offline calibration key the DuckDB oracle
+    * rebuilds with string_agg. */
+  private[operators] def bandKeys(sigs: DataFrame, bands: Int, rows: Int): DataFrame =
+    sigs.select(col("doc_id"),
+        posexplode(transform(sequence(lit(0), lit(bands - 1)),
+          b => concat_ws(",", slice(col("sig"), b * lit(rows) + 1, lit(rows))))))
+      .toDF("doc_id", "band", "bkey")
+
+  /** The production 32-band × 3-row LSH table: [[bandKeys]] hashed to
+    * 8-byte (doc_id, band, bandhash) rows, bandhash = xxhash64 of the
+    * key seeded with the band number. */
+  private[operators] def lshBands(sigs: DataFrame): DataFrame =
+    bandKeys(sigs, 32, 3)
+      .select(col("doc_id"), col("band"), xxhash64(col("bkey"), col("band")).as("bandhash"))
 
   /** The admission core: batch docs vs an existing (sigs, bands) pair
     * — inline frames or a [[persistBandTable]] read-back. */
@@ -620,9 +644,9 @@ object Dedup {
     * [[Similarity.persistIvfPqIndex]] for the ANN index: band table
     * bucketed on the probe key (band, bandhash) so an increment's
     * admission join rides the bucketing exchange-free; signatures
-    * bucketed on doc_id for the verify join. Because min-aggs are
-    * deterministic, an admission against the persisted artifact is
-    * EXACTLY the inline result (pinned by spec) — unlike a float
+    * bucketed on doc_id for the verify join. Because signatures are
+    * deterministic per doc, an admission against the persisted
+    * artifact is EXACTLY the inline result (pinned by spec) — unlike a float
     * index, nothing drifts across the persist boundary. */
   def persistBandTable(spark: SparkSession, sfDir: String,
       name: String = "bands", buckets: Int = 8): Unit = {
@@ -1009,8 +1033,9 @@ object Dedup {
     base.unionByName(plants)
   }
 
-  /** The 96-permutation signature table over [[corpusWithPlants]],
-    * MEMOIZED PER (session, sfDir, k) in a [[graft.SessionMemo]]:
+  /** The k-permutation [[minhashSigs]] table over
+    * [[corpusWithPlants]], MEMOIZED PER (session, sfDir, k) in a
+    * [[graft.SessionMemo]]:
     * three queries (minhash_lsh, minhash_calibration, lsh_tuning)
     * consume the identical table, and the production shape builds
     * signatures once per corpus snapshot ([[persistBandTable]] is the
@@ -1022,17 +1047,7 @@ object Dedup {
 
   private val minhashSigMemo =
     SessionMemo[(String, Int), DataFrame]("dedup_minhash_sigs") {
-      case (spark, (sfDir, k)) =>
-        val ex = corpusWithPlants(spark, sfDir)
-          .select(col("doc_id"),
-            explode(shingleMd5Hashes(col("toks"), 3)).as("h0"))
-        val minAggs =
-          (0 until k).map(i => min(affineHash(col("h0"), i)).as(s"m$i"))
-        ex.groupBy(col("doc_id"))
-          .agg(minAggs.head, minAggs.tail: _*)
-          .select(col("doc_id"),
-            array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-          .cut
+      case (spark, (sfDir, k)) => minhashSigs(corpusWithPlants(spark, sfDir), k)
     }
 
   /** Drop this session's memoized signature table. */
@@ -1040,24 +1055,20 @@ object Dedup {
     minhashSigMemo.invalidate(spark)
 
   /** §2#26 MinHash + banded LSH near-dup detection: 96-hash signatures,
-    * 32 bands × 3 rows. Signatures are built as 96 codegen'd `min`
-    * aggregates over exploded shingles (map-side partial, one shuffle
-    * on doc_id) → band rows (band, bandhash, doc_id) → shuffle on the
+    * 32 bands × 3 rows. Signatures come from the memoized
+    * [[minhashSignatures]] table (one narrow per-doc projection, no
+    * shuffle) → band rows (band, bandhash, doc_id) → shuffle on the
     * band bucket → in-bucket pair-join → signature-estimated
     * Jaccard ≥ 0.5. */
   def minhashLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = 96; val bands = 32; val rows = k / bands
+    val k = 96
     // REPLAYABLE basis (r11): md5-mod-2^31 per shingle window, then
     // the k permutations as the affine family (a_i·h+b_i) mod p — ONE
     // md5 + 96 multiply-adds per shingle, vs the 96 xxhash64 calls of
-    // the old seeded path (measured FASTER at sf0.1: arithmetic beats
-    // 95 extra hash invocations). The DuckDB oracle regenerates the
-    // same a_i/b_i from range(96) and hash-gates the pairs.
+    // the old seeded path. The DuckDB oracle regenerates the same
+    // a_i/b_i from range(96) and hash-gates the pairs.
     val sigs = minhashSignatures(spark, sfDir, k)
-    val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",", slice(col("sig"), b * lit(rows) + 1, lit(rows))), b))))
-      .toDF("doc_id", "band", "bandhash")
+    val banded = lshBands(sigs)
     val pairs = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") &&
         col("x.bandhash") === col("y.bandhash") &&
@@ -1095,10 +1106,7 @@ object Dedup {
   def minhashCalibration(spark: SparkSession, sfDir: String): DataFrame = {
     val k = 96
     val sigs = minhashSignatures(spark, sfDir, k)
-    val banded = sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(31)),
-          bb => concat_ws(",", slice(col("sig"), bb * lit(3) + 1, lit(3))))))
-      .toDF("doc_id", "band", "bkey")
+    val banded = bandKeys(sigs, 32, 3)
     val pairs = banded.as("x").join(banded.as("y"),
         col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
           && col("x.doc_id") < col("y.doc_id"))
@@ -1182,10 +1190,7 @@ object Dedup {
     val k = 96
     val sigs = minhashSignatures(spark, sfDir, k)
     lshTuningConfigs.map { case (b, r) =>
-      val banded = sigs.select(col("doc_id"),
-          posexplode(transform(sequence(lit(0), lit(b - 1)),
-            bb => concat_ws(",", slice(col("sig"), bb * lit(r) + 1, lit(r))))))
-        .toDF("doc_id", "band", "bkey")
+      val banded = bandKeys(sigs, b, r)
       val cands = banded.as("x").join(banded.as("y"),
           col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey")
             && col("x.doc_id") < col("y.doc_id"))

@@ -861,11 +861,12 @@ object TextAnalysis {
     * corpus-derived [[plantOffset]]. Replayable md5+affine family
     * throughout ⇒ the DuckDB oracle recomputes signatures bit-for-bit
     * and the query is hash-gated like the #26 family. Scale shape:
-    * 96 map-side-combinable min-aggs per side, ONE broadcast probe
-    * (no corpus shuffle before verification), verify join bounded by
+    * ONE narrow per-doc signature projection over both sides
+    * ([[Dedup.minhashSigs]], no shuffle), ONE broadcast probe (no
+    * corpus shuffle before verification), verify join bounded by
     * collisions — never corpus×bench. */
   def decontaminateFuzzy(spark: SparkSession, sfDir: String): DataFrame = {
-    val k = 96; val bands = 32; val rows = k / bands
+    val k = 96
     val base = Tables.documentsPar(spark, sfDir)
       .select(col("doc_id"), tokens(col("text")).as("toks"))
     val off = plantOffset(base)
@@ -875,35 +876,18 @@ object TextAnalysis {
         greatest(size(col("toks")) - 3, lit(1))).as("toks"))
     val train = base.where(col("doc_id") % 50 =!= 0).unionByName(plants)
 
-    def sigsOf(docs: DataFrame): DataFrame = {
-      val ex = docs.select(col("doc_id"),
-        explode(shingleMd5Hashes(col("toks"), 3)).as("h0"))
-      val minAggs = (0 until k).map(i => min(affineHash(col("h0"), i)).as(s"m$i"))
-      ex.groupBy(col("doc_id"))
-        .agg(minAggs.head, minAggs.tail: _*)
-        .select(col("doc_id"),
-          array((0 until k).map(i => col(s"m$i")): _*).as("sig"))
-        .cut
-    }
-    def bandsOf(sigs: DataFrame): DataFrame =
-      sigs.select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(bands - 1)),
-          b => xxhash64(concat_ws(",",
-            slice(col("sig"), b * lit(rows) + 1, lit(rows))), b))))
-        .toDF("doc_id", "band", "bandhash")
-
     // ONE signature pass + ONE checkpoint over bench ∪ train instead
-    // of two sequential sigsOf cuts (r17, guide §2.4): the doc-id sets
-    // are disjoint (bench = originals ≡0 mod 50; train = the rest plus
-    // plants at id+off, off a multiple of 50 and > every original id),
-    // so the two tables split back out of the union losslessly.
-    val allSigs = sigsOf(bench.unionByName(train))
+    // of two sequential signature cuts (r17, guide §2.4): the doc-id
+    // sets are disjoint (bench = originals ≡0 mod 50; train = the rest
+    // plus plants at id+off, off a multiple of 50 and > every original
+    // id), so the two tables split back out of the union losslessly.
+    val allSigs = Dedup.minhashSigs(bench.unionByName(train), k)
     val bSigs = allSigs
       .where(col("doc_id") % 50 === 0 && col("doc_id") < off)
     val tSigs = allSigs
       .where(col("doc_id") % 50 =!= 0 || col("doc_id") >= off)
-    val cand = bandsOf(tSigs)
-      .join(broadcast(bandsOf(bSigs)
+    val cand = Dedup.lshBands(tSigs)
+      .join(broadcast(Dedup.lshBands(bSigs)
         .select(col("band"), col("bandhash"), col("doc_id").as("bench_doc"))),
         Seq("band", "bandhash"))
       .select(col("doc_id"), col("bench_doc")).distinct()

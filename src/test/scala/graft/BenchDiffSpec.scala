@@ -47,4 +47,12 @@ class BenchDiffSpec extends AnyFunSuite {
     val all = Bench.compactLine(1.0, entries - long, 0, 0, "sf", 4, 1L)
     assert(all.contains(""""queries":{"big":12345678.90,"small":0.50,"tiny":0.00}"""), all)
   }
+
+  test("ioRecord: one query's first-rep deltas, codegen compiles included") {
+    val pre = IoSnapshot(10L, 20L, 0L, 5L, 100L, codegenCompiles = 40L)
+    val post = IoSnapshot(110L, 220L, 3L, 9L, 400L, codegenCompiles = 47L)
+    assert(Bench.ioRecord(post - pre) ===
+      """{"shuffle_read_b":100,"shuffle_write_b":200,"spill_b":3,""" +
+        """"peak_exec_mem_b":9,"input_read_b":300,"codegen_compiles":7}""")
+  }
 }

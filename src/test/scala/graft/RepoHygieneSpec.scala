@@ -181,4 +181,16 @@ class RepoHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"SparkSession.builder outside Harness.scala/GraftMain.scala: $offenders — use graft.Harness.session")
   }
+
+  test("no min(affineHash( in src/main: one MinHash signature builder") {
+    // the k-permutation signature is one native per-row expression
+    // (MinHashSignature, built by Dedup.minhashSigs); a k-wide
+    // min-aggregate copy beside it is a second definition that can
+    // drift from the oracle and from the persisted band tables
+    val offenders = scalaFiles("src/main")
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8")
+        .contains("min(affineHash("))
+    assert(offenders.isEmpty,
+      s"min(affineHash( in: $offenders — build signatures with Dedup.minhashSigs")
+  }
 }

@@ -43,6 +43,21 @@ class ShuffleMetricsSpec extends SparkSuite {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
+  test("codegen compiles: a new plan compiles its classes, a rerun hits the cache") {
+    val l = ShuffleMetrics.install(spark)
+    try {
+      def run(): IoSnapshot = {
+        val pre = l.snapshot(spark.sparkContext)
+        spark.range(5000L).select((col("id") * 7919L + 104729L).as("x"))
+          .where(col("x") % 13L === 5L).agg(max(col("x"))).collect()
+        l.snapshot(spark.sparkContext, resetPeak = false) - pre
+      }
+      val first = run()
+      assert(first.codegenCompiles > 0L, s"first run compiled nothing: $first")
+      assert(run().codegenCompiles === 0L, "the same plan missed the codegen cache")
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
   /** One join's (shuffleRead+shuffleWrite) bytes via snapshot delta.
     * The aggregate consumes BOTH sides' wide columns so column pruning
     * can't drop the payload before the exchange — a bare count() would

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Specs for the r10 rows-kind operators (the sql-kind ones are gated
   * by the DuckDB hash oracle). */
@@ -49,11 +50,19 @@ class R10OpsSpec extends SparkSuite {
   test("persisted band table: admission against the artifact == inline, bit for bit") {
     val name = "bands_spec_" + math.abs(this.hashCode())
     Dedup.persistBandTable(spark, sf, name)
+    // the artifact's read-back schema, which tables persisted by
+    // earlier builds also carry
+    assert(spark.table(s"${name}_sigs").schema === StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("sig", ArrayType(LongType, containsNull = true)))))
+    assert(spark.table(s"${name}_bands").schema === StructType(Seq(
+      StructField("doc_id", LongType), StructField("band", IntegerType),
+      StructField("bandhash", LongType))))
     val persisted = Dedup.incrementalMinhashPersisted(spark, sf, name)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val inline = Dedup.incrementalMinhash(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    // min-agg signatures are deterministic, so the persist boundary
+    // signatures are deterministic per doc, so the persist boundary
     // changes NOTHING about the verdicts
     assert(persisted.toSeq === inline.toSeq)
     assert(persisted.exists(_._2 == 1L), "fixture has near-dups to admit")

@@ -874,4 +874,37 @@ class PlanQualitySpec extends SparkSuite {
     assert(lines(plan, "Exchange hashpartitioning(doc_id") === 1,
       s"label-prop round has a second node-keyed exchange:\n$plan")
   }
+
+  test("MinHash signature build: one narrow projection, no hash Exchange, Generate or HashAggregate") {
+    // the build is the memo's cut, so its plan is read from the
+    // checkpoint action's own QueryExecution
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (Set("checkpoint", "localCheckpoint")(funcName)) plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Dedup.invalidateMinhashSignatures(spark)
+      Dedup.minhashSignatures(spark, sf, 96)
+      org.apache.spark.GraftListenerShim.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size === 1, s"expected one signature build, got ${plans.size}")
+    val plan = plans.peek().split("== Initial Plan ==")(0)
+    // one signature per doc: computed in the projection of each union
+    // branch (corpus, plants), never again in a pushed-down filter
+    val sigLines = plan.linesIterator.filter(_.contains("graft_minhash_sig(")).toSeq
+    assert(sigLines.size === 2 && sigLines.forall(_.contains("Project [")),
+      s"signature not computed exactly once per doc:\n$plan")
+    for (node <- Seq("Generate", "HashAggregate"))
+      assert(!plan.contains(node), s"$node in the signature build:\n$plan")
+    // the only exchange is documentsPar's round-robin spread of the
+    // single-file corpus, ahead of the build
+    assert(plan.linesIterator.filter(_.contains("Exchange"))
+        .forall(_.contains("Exchange RoundRobinPartitioning")),
+      s"the signature build shuffles:\n$plan")
+  }
 }
