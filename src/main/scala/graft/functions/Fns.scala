@@ -29,6 +29,14 @@ object Fns {
 
   def str(c: Column): Column = c.cast("string")
 
+  /** Consistent-sampling hash of a BIGINT id: Knuth multiplicative
+    * ((x mod p)·2654435761) mod p with p = 10⁹+7 — pure integer
+    * arithmetic the DuckDB oracle reproduces exactly, and (x mod p) < 2³⁰
+    * keeps the product below 2⁶² (no ANSI overflow). Samplers gate on
+    * `consistentHash(id) % 1000` thresholds; seeds take its bottom-k. */
+  def consistentHash(x: Column): Column =
+    (x % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L)
+
   /** Whitespace tokens of a trimmed text column. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 

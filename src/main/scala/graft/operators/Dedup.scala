@@ -937,11 +937,8 @@ object Dedup {
     * TakeOrderedAndProject. The rep frame is `.cut` — it feeds both
     * sides of the self-join. */
   def clusterEmbed(spark: SparkSession, sfDir: String, k: Int = 50): DataFrame = {
-    graft.functions.Registry.ensure(spark)
     val sizes = clusterLabels(spark, sfDir)
       .groupBy(col("cluster_id")).agg(count(lit(1)).as("n_docs"))
-    // session memoized base (r18): was a raw scan+cast, with nrm
-    // recomputed on the rep rows — the memo's nrm is the same norm2
     val reps = Similarity.corpusCut(spark, sfDir)
       .join(sizes, col("vec_id") === col("cluster_id"))
       .select(col("cluster_id"), col("n_docs"), col("label"), col("emb"),
@@ -953,8 +950,8 @@ object Dedup {
       .select(col("x.cluster_id").as("cluster_a"),
         col("y.cluster_id").as("cluster_b"),
         col("x.n_docs").as("docs_a"), col("y.n_docs").as("docs_b"),
-        scaled(dot(col("x.emb"), col("y.emb"))
-          / (col("x.nrm") * col("y.nrm")), 1000000L).as("cos_e6"))
+        Similarity.cosPre(col("x.emb"), col("x.nrm"), col("y.emb"), col("y.nrm"))
+          .as("cos_e6"))
       .orderBy(col("cos_e6").desc, col("cluster_a"), col("cluster_b"))
       .limit(k)
   }
@@ -1312,26 +1309,31 @@ object Dedup {
     * the same label block. The label is a DEMO blocking key (it keeps
     * the oracle SQL-expressible); for unlabeled corpora use
     * embeddingNearDupLsh below. */
-  def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.Registry.ensure(spark)
-    // the session's memoized (vec_id, label, emb, nrm) base (r18):
-    // both self-join sides re-ran the raw scan+cast+norm per call.
-    // Plants copy their source row verbatim, so the memo's nrm (the
-    // same norm2 hoist, same FP ops as the oracle's
-    // dot/(sqrt(aa)*sqrt(bb))) carries over bit-identically.
-    val base = Similarity.corpusCut(spark, sfDir)
-    val plants = base.where(col("vec_id") < 100)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("label"),
-        col("emb"), col("nrm"))
-    val corpus = base.unionByName(plants)
+  def embeddingNearDup(spark: SparkSession, sfDir: String): DataFrame =
+    embeddingPairs(plantedEmbeddings(spark, sfDir, "label", "emb", "nrm"), "label")
+
+  /** The embedding near-dup corpus: the session's memoized (vec_id,
+    * `cols`…) base ∪ exact copies of its vec_id < 100 rows re-keyed to
+    * vec_id + 1000000 — real dups to find. Plants copy their source row
+    * verbatim, so the memo's nrm (the same norm2 hoist, same FP ops as
+    * the oracle's dot/(sqrt(aa)*sqrt(bb))) carries over bit-identically. */
+  private def plantedEmbeddings(spark: SparkSession, sfDir: String,
+      cols: String*): DataFrame = {
+    val base = Similarity.corpusCut(spark, sfDir).select(("vec_id" +: cols).map(col): _*)
+    base.unionByName(Similarity.firstIds(base, 100)
+      .withColumn("vec_id", col("vec_id") + 1000000L))
+  }
+
+  /** Near-dup pairs of a planted embedding corpus: every pair sharing
+    * the `block` key with cos ≥ 0.95, as (vec_a, vec_b, cos_e6). */
+  private def embeddingPairs(corpus: DataFrame, block: String): DataFrame =
     corpus.as("x").join(corpus.as("y"),
-        col("x.label") === col("y.label") && col("x.vec_id") < col("y.vec_id"))
+        col(s"x.$block") === col(s"y.$block") && col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        scaled(dot(col("x.emb"), col("y.emb")) / (col("x.nrm") * col("y.nrm")),
-          1000000L).as("cos_e6"))
+        Similarity.cosPre(col("x.emb"), col("x.nrm"), col("y.emb"), col("y.nrm"))
+          .as("cos_e6"))
       .where(col("cos_e6") >= 950000L)
       .orderBy(col("vec_a"), col("vec_b"))
-  }
 
   /** §2#119 SemDeDup (Abbas et al. 2023, arXiv:2303.09540): SEMANTIC
     * dedup — k-means-cluster the embedding space, then within each
@@ -1364,35 +1366,19 @@ object Dedup {
     * verdict partition, dup-free subset untouched). */
   def semantic(spark: SparkSession, sfDir: String, nCells: Int = 8,
       iters: Int = 2, thresholdE6: Long = 950000L): DataFrame = {
-    graft.functions.Registry.ensure(spark)
-    // the session's memoized base projected to (vec_id, emb, nrm)
-    // (r18): the plant copies reuse their source rows' nrm verbatim,
-    // and the per-call cut of the planted corpus is dropped — its
-    // consumers (seeding, two Lloyd's scans, assignment) now read the
-    // memo's checkpoint blocks through a cheap union instead of
-    // re-materializing scan+cast+norm per call
-    val base = Similarity.corpusCut(spark, sfDir)
-      .select(col("vec_id"), col("emb"), col("nrm"))
-    // same plant convention as embeddingNearDup: exact copies of
-    // vec_id<100 give the operator real semantic dups to find
-    val plants = base.where(col("vec_id") < 100)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("emb"), col("nrm"))
-    val corpus = base.unionByName(plants)
+    // the planted corpus reads the memo's checkpoint blocks through a
+    // cheap union — its consumers (seeding, two Lloyd's scans,
+    // assignment) never re-materialize scan+cast+norm per call
+    val corpus = plantedEmbeddings(spark, sfDir, "emb", "nrm")
     val cents = Similarity.kmeansCentroids(corpus, nCells, iters)
     // hard-assign each vector to its best cell IN-ROW against the
-    // broadcast centroid array (cc = cos to OWN centroid) — the
-    // corpus-wide argmax groupBy removed (r17, guide §2.4; same
-    // e6-cosine, same (cc, −cell) tie-break as the max_by form)
-    val assigned = corpus
-      .crossJoin(broadcast(Similarity.centsAsArray(cents)))
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        Similarity.bestCellStruct(col("emb"), col("nrm")).as("best"))
+    // broadcast centroid array (cc = cos to OWN centroid) — no
+    // corpus-wide argmax groupBy (guide §2.4)
+    val assigned = Similarity.assign(corpus, cents)
       .select(col("vec_id"), col("emb"), col("nrm"),
         col("best.cell").as("cell"), col("best.cell_cos").as("cc"))
       .cut // feeds both sides of the pair join + output
-    val slim = assigned.select(col("vec_id"), col("emb"), col("nrm"),
-      col("cell"), col("cc"))
-    val dropped = slim.as("x").join(slim.as("y"),
+    val dropped = assigned.as("x").join(assigned.as("y"),
         col("x.cell") === col("y.cell") && col("x.vec_id") =!= col("y.vec_id") &&
         (col("x.cc") < col("y.cc") ||
           (col("x.cc") === col("y.cc") && col("x.vec_id") < col("y.vec_id"))))
@@ -1414,24 +1400,9 @@ object Dedup {
     * separates them (probabilistic — standard LSH trade; add rotated
     * bucket tables to push recall up). One shuffle on the bucket key,
     * in-bucket pair join — never corpus×corpus. */
-  def embeddingNearDupLsh(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.Registry.ensure(spark)
-    // session memoized base (r18), plants reuse their source nrm —
-    // same derivation as embeddingNearDup above
-    val base = Similarity.corpusCut(spark, sfDir)
-      .select(col("vec_id"), col("emb"), col("nrm"))
-    val plants = base.where(col("vec_id") < 100)
-      .select((col("vec_id") + 1000000L).as("vec_id"), col("emb"), col("nrm"))
-    val corpus = base.unionByName(plants)
-      .withColumn("bucket", hyperplaneBucket(col("emb"), 12, 64))
-    corpus.as("x").join(corpus.as("y"),
-        col("x.bucket") === col("y.bucket") && col("x.vec_id") < col("y.vec_id"))
-      .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"),
-        scaled(dot(col("x.emb"), col("y.emb")) / (col("x.nrm") * col("y.nrm")),
-          1000000L).as("cos_e6"))
-      .where(col("cos_e6") >= 950000L)
-      .orderBy(col("vec_a"), col("vec_b"))
-  }
+  def embeddingNearDupLsh(spark: SparkSession, sfDir: String): DataFrame =
+    embeddingPairs(plantedEmbeddings(spark, sfDir, "emb", "nrm")
+      .withColumn("bucket", hyperplaneBucket(col("emb"), 12, 64)), "bucket")
 
   /** §2#103 winnowing fingerprints (Schleimer/Wilkerson/Aiken,
     * SIGMOD'03 — the MOSS algorithm): slide a window of `w` consecutive

@@ -53,7 +53,7 @@ object Pipeline {
     val norm = docs.select(col("doc_id"), col("source"), col("lang"),
       normText(col("text")).as("norm_text"))
     val bench = array(benchWindowHashes.map(lit): _*)
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     val rate = Sampling.stratifiedRatesPm.toSeq.sortBy(_._1)
       .foldLeft(lit(0L)) { case (acc, (lang, pm)) =>
         when(col("lang") === lang, lit(pm)).otherwise(acc)
@@ -98,7 +98,7 @@ object Pipeline {
     val norm = docs.select(col("ts"), col("doc_id"), col("source"), col("lang"),
       normText(col("text")).as("norm_text"))
     val bench = array(benchWindowHashes.map(lit): _*)
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     val rate = Sampling.stratifiedRatesPm.toSeq.sortBy(_._1)
       .foldLeft(lit(0L)) { case (acc, (lang, pm)) =>
         when(col("lang") === lang, lit(pm)).otherwise(acc)
@@ -171,7 +171,7 @@ object Pipeline {
     val clean = quality.where(col("doc_id") % 50 =!= 0)
       .join(contaminated, Seq("doc_id"), "left_anti")
     // 5. stratified sample (same per-language rates as sample_stratified)
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     val rate = Sampling.stratifiedRatesPm.toSeq.sortBy(_._1)
       .foldLeft(lit(0L)) { case (acc, (lang, pm)) =>
         when(col("lang") === lang, lit(pm)).otherwise(acc)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
+import graft.functions.Fns.consistentHash
 
 /** Deterministic sampling for training-data pipelines (§2.4/§2.6
   * adjacent): uniform per-group samples via bottom-k-by-hash.
@@ -19,7 +20,7 @@ object Sampling {
 
   /** §2#48 k docs per source, deterministically. */
   def sampleDocs(spark: SparkSession, sfDir: String, k: Int = 10): DataFrame = {
-    val h = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L)
+    val h = consistentHash(col("doc_id"))
     val w = Window.partitionBy(col("source")).orderBy(col("h"), col("doc_id"))
     Tables.documents(spark, sfDir)
       .select(col("source"), col("doc_id"), h.as("h"))
@@ -90,7 +91,7 @@ object Sampling {
       .orderBy(col("source"))
 
   def sampleMixture(spark: SparkSession, sfDir: String): DataFrame = {
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     // keep‰ per source: 100 + (idx·53 mod 900) — spread over [100, 1000)
     val keepPm = (substring(col("source"), 4, 10).cast("long") * lit(53L))
       .mod(lit(900L)) + lit(100L)
@@ -136,8 +137,7 @@ object Sampling {
         least(lit(1000L), expr("1000 * target_n div n_docs")))
       .select(col("source"), col("n_docs"), col("w"), col("target_n"),
         col("keep_pm"))
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) %
-      lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     d.select(col("source"), bucket.as("bucket"))
       .join(broadcast(rates), "source")
       .groupBy(col("source"), col("n_docs"), col("w"), col("target_n"),
@@ -193,8 +193,7 @@ object Sampling {
     * each split's min/max bucket as a self-check that thresholds held.
     */
   def sampleSplit(spark: SparkSession, sfDir: String): DataFrame = {
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) %
-      lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     Tables.documents(spark, sfDir)
       .select(col("source"), bucket.as("bucket"))
       .withColumn("split",
@@ -236,7 +235,7 @@ object Sampling {
   }
 
   def sampleStratified(spark: SparkSession, sfDir: String): DataFrame = {
-    val bucket = (col("doc_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(1000L)
+    val bucket = consistentHash(col("doc_id")) % lit(1000L)
     // rate lookup as a codegen'd when-chain over the tiny static map
     val rate = stratifiedRatesPm.toSeq.sortBy(_._1)
       .foldLeft(lit(0L)) { case (acc, (lang, pm)) =>

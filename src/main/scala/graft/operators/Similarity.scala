@@ -9,6 +9,22 @@ import graft.functions.Fns._
 
 /** Similarity search over the embeddings table (§2.5).
   *
+  * Every top-k query here is one spine, each step written once:
+  *  1. the QUERY SET — [[firstIds]] / [[querySet]]: the first vectors
+  *     by id, small and broadcast;
+  *  2. CANDIDATES — the rung's own generator: the exact scan
+  *     ([[exactPairs]]), LSH buckets, IVF cells ([[probe]] against the
+  *     per-row assignment [[assign]]), or a PQ/SQ8 code scan;
+  *  3. the EXACT RE-RANK — [[rerank]] (approximate rungs shortlist
+  *     first, [[adcRerank]]);
+  *  4. the RANK — [[topK]]: (cos_e6 desc, neighbor_id), rank ≤ k,
+  *     ordered (query_id, rank); every other per-group cut rides the
+  *     same [[firstN]] window.
+  * Each query keeps its own scoring expression (`cosPre` on the raw
+  * corpus, `dot` on unit vectors, ADC sums), so the rungs are
+  * interchangeable candidate generators measured against the same
+  * exact top-k ([[recallReport]]).
+  *
   * Brute force is the exactness baseline (query set × corpus — fine
   * because the query set is small and broadcast). The 100 TB path is
   * `lshTopk`: corpus shuffles once on its hyperplane bucket; each query
@@ -56,13 +72,90 @@ object Similarity {
         c.getField("cell").as("cell"),
         c.getField("c_emb").as("c_emb"))))
 
-  /** Per-query (cell, cell_cos) candidates for probe selection: the
-    * same broadcast `cents_arr`, exploded only on the (tiny) query
-    * side — corpus rows never fan out by |cells|. */
-  private def cellScores(emb: Column, nrm: Column): Column =
-    transform(col("cents_arr"), c =>
-      struct(c.getField("cell").as("cell"),
-        cosPre(emb, nrm, c.getField("c_emb"), c.getField("c_nrm")).as("cell_cos")))
+  /** Every row of `df` (needs emb, nrm) with its nearest centroid of
+    * `cents` as the [[bestCellStruct]] column `best` — the per-row
+    * assignment against the broadcast [[centsAsArray]] row that IVF,
+    * k-means, cell health/split and semantic dedup all share. */
+  private[operators] def assign(df: DataFrame, cents: DataFrame): DataFrame =
+    df.crossJoin(broadcast(centsAsArray(cents)))
+      .select(df.columns.map(col) :+
+        bestCellStruct(col("emb"), col("nrm")).as("best"): _*)
+
+  /** The rows of `df` with vec_id < n: the query set of every ANN query
+    * (n = 10, or 50 for the classifiers) and the planted-copy sources
+    * of the embedding near-dup ops (n = 100). */
+  private[operators] def firstIds(df: DataFrame, n: Int): DataFrame =
+    df.where(col("vec_id") < n)
+
+  /** The query side of a corpus frame: [[firstIds]] with vec_id renamed
+    * to query_id and every other column c to q_c (q_emb, q_nrm,
+    * q_label), so it joins the corpus without name clashes. */
+  private def querySet(base: DataFrame, n: Int = 10): DataFrame =
+    firstIds(base, n).select(base.columns.map {
+      case "vec_id" => col("vec_id").as("query_id")
+      case c => col(c).as(s"q_$c")
+    }: _*)
+
+  /** Each `part` group's first `n` rows by (`score` desc, `tie`),
+    * numbered from 1 in column `as`: the one ranking window of the
+    * spine (final rank, shortlists, cell probes, label votes). */
+  private def firstN(df: DataFrame, n: Int, as: String, part: String = "query_id",
+      score: String = "cos_e6", tie: String = "neighbor_id"): DataFrame =
+    df.withColumn(as, row_number().over(
+        Window.partitionBy(col(part)).orderBy(col(score).desc, col(tie))))
+      .where(col(as) <= n)
+
+  /** The spine's last step: each query's top k by exact cos_e6, ties
+    * to the smaller neighbor_id, as a BIGINT `rank`, ordered
+    * (query_id, rank). Ranking on µ-scaled cosine means cross-engine
+    * float noise can't flip ranks. */
+  private def topK(sims: DataFrame, k: Int): DataFrame =
+    firstN(sims, k, "rank").withColumn("rank", col("rank").cast("long"))
+      .orderBy(col("query_id"), col("rank"))
+
+  /** The exact candidate scan: every (query, corpus vector) pair but the
+    * query itself, restricted by `on`, as (query_id, neighbor_id,
+    * `keep`…, cos_e6). The query side is the broadcast one. */
+  private def exactPairs(base: DataFrame, q: DataFrame, on: Column,
+      keep: Column*): DataFrame =
+    base.join(broadcast(q), col("vec_id") =!= col("query_id") && on)
+      .select(Seq(col("query_id"), col("vec_id").as("neighbor_id")) ++ keep :+
+        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"): _*)
+
+  /** Exact re-rank of candidate (query_id, neighbor_id) pairs: each
+    * joins back to its neighbor's vector in `base` and to the broadcast
+    * query side, is scored by `score` (over q_emb/q_nrm and emb/nrm)
+    * and the [[topK]] kept. Candidates are deduped by the caller, so
+    * the raw-vector read touches each candidate once. */
+  private def rerank(cands: DataFrame, base: DataFrame, k: Int,
+      score: Column): DataFrame =
+    topK(cands
+      .join(base.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
+      .join(broadcast(querySet(base)), "query_id")
+      .select(col("query_id"), col("neighbor_id"), score.as("cos_e6")), k)
+
+  /** Each query's `nProbe` nearest cells of `cents` (cell_cos desc,
+    * ties to the smaller cell): the query rows of `q` (query_id, q_emb,
+    * q_nrm, …) fanned out to (…, cell, cell_cos). The |cells| fan-out
+    * happens on the tiny query side only, against the same broadcast
+    * centroid row [[assign]] scores the corpus with. */
+  private def probe(q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    val scored = q.crossJoin(broadcast(centsAsArray(cents)))
+      .select(q.columns.map(col) :+ inline(transform(col("cents_arr"), c =>
+        struct(c.getField("cell").as("cell"),
+          cosPre(col("q_emb"), col("q_nrm"), c.getField("c_emb"),
+            c.getField("c_nrm")).as("cell_cos")))): _*)
+    firstN(scored, nProbe, "prk", score = "cell_cos", tie = "cell").drop("prk")
+  }
+
+  /** The `n` rows of `base` with the smallest [[consistentHash]] of
+    * vec_id (ties to the smaller id), numbered from 0 in column `as` —
+    * deterministic k-means / codebook seeds, no collect. */
+  private def hashSeeds(base: DataFrame, n: Int, as: String): DataFrame =
+    base.withColumn("h", consistentHash(col("vec_id")))
+      .orderBy(col("h"), col("vec_id")).limit(n) // n rows: the unpartitioned window is cheap
+      .withColumn(as,
+        row_number().over(Window.orderBy(col("h"), col("vec_id"))).cast("long") - 1L)
 
   /** §2#29 exact cosine top-5 per query vector (vec_id < 10). The tiny
     * query side is broadcast; ranking is on µ-scaled cosine so
@@ -138,21 +231,9 @@ object Similarity {
     * checkpoint scan would otherwise hide. */
   private[graft] def computeBruteforceTopk(spark: SparkSession, sfDir: String,
       k: Int = 5): DataFrame = {
-    // both legs read the session's memoized base blocks (r18): the
-    // truth build paid the corpus scan+cast+norm twice per build
+    // both legs read the session's memoized base blocks
     val base = corpusCut(spark, sfDir)
-    val q = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val sims = base.join(broadcast(q),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(exactPairs(base, querySet(base), lit(true)), k)
   }
 
   /** §2#229 RANGE SEARCH — the fixed-radius twin of top-k (faiss
@@ -173,15 +254,8 @@ object Similarity {
     * join, not an ORDER BY. */
   def rangeSearch(spark: SparkSession, sfDir: String,
       thresholdE6: Long = 200000L): DataFrame = {
-    // shared memoized base (r18): was two raw corpus scans per call
     val base = corpusCut(spark, sfDir)
-    val q = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    base.join(broadcast(q),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
+    exactPairs(base, querySet(base), lit(true))
       .where(col("cos_e6") >= thresholdE6)
       .orderBy(col("query_id"), col("neighbor_id"))
   }
@@ -204,9 +278,6 @@ object Similarity {
     * corpus (spec floor ≥70%); real clustered embeddings sit higher. */
   def lshTopk(spark: SparkSession, sfDir: String, k: Int = 5,
       nTables: Int = 16, nBits: Int = 6, nProbes: Int = 2): DataFrame = {
-    // shared memoized base (r18): the four legs below (bucketing,
-    // query fan-out, re-rank join, query vectors) each re-ran the raw
-    // corpus scan+cast+norm — two of them full-corpus
     val base = corpusCut(spark, sfDir)
     val buckets = array((0 until nTables).map(t =>
       hyperplaneBucketSeeded(col("emb"), nBits, 64, t.toLong)): _*)
@@ -216,62 +287,32 @@ object Similarity {
     // probe array's head equals the corpus bucket), plus the
     // lowest-margin single-bit flips
     val probeArrays = array((0 until nTables).map(t =>
-      hyperplaneProbesSeeded(col("emb"), nBits, 64, t.toLong, nProbes)): _*)
-    val qBuckets = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"),
-        posexplode(probeArrays).as(Seq("t", "probes")))
+      hyperplaneProbesSeeded(col("q_emb"), nBits, 64, t.toLong, nProbes)): _*)
+    val qBuckets = querySet(base)
+      .select(col("query_id"), posexplode(probeArrays).as(Seq("t", "probes")))
       .select(col("query_id"), col("t"), explode(col("probes")).as("bucket"))
     val candIds = bucketed.join(broadcast(qBuckets), Seq("t", "bucket"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"))
       .distinct()
-    val qVecs = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val sims = candIds
-      .join(base.select(col("vec_id").as("neighbor_id"), col("emb"), col("nrm")),
-        "neighbor_id")
-      .join(broadcast(qVecs), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    rerank(candIds, base, k,
+      cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")))
   }
 
   /** §2#47 nearest-centroid classification: per-label element-wise mean
     * centroid (posexplode → groupBy(label, dim) → avg → re-assembled
     * sorted array — all built-in, partial-agg friendly), then each
     * query vector (vec_id < 50) is assigned the label of the nearest
-    * centroid by cosine. Centroids are tiny → broadcast. */
+    * centroid by cosine (ties to the smaller label): a one-cell
+    * [[probe]] of the label-centroid cells. Centroids are tiny →
+    * broadcast. */
   def centroidClassify(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.Registry.ensure(spark)
-    // shared memoized base (r18): centroid training and the query leg
-    // each re-ran the raw scan+cast; the memo's nrm column IS
-    // norm2(emb), the exact expression the query leg computed inline
     val base = corpusCut(spark, sfDir)
-    val centroids = base
-      .select(col("label"), posexplode(col("emb")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim")).agg(avg(col("x")).as("m"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("parts"))
-      .select(col("label").as("c_label"),
-        transform(col("parts"), p => p.getField("m")).as("c_emb"))
-      .withColumn("c_nrm", norm2(col("c_emb")))
-    val q = base.where(col("vec_id") < 50)
-    val scored = q.crossJoin(broadcast(centroids))
-      .select(col("vec_id"), col("label").as("actual_label"), col("c_label"),
-        cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos_e6").desc, col("c_label"))
-    scored.withColumn("rk", row_number().over(w))
-      .where(col("rk") === 1)
-      .select(col("vec_id"),
-        col("c_label").cast("long").as("predicted_label"),
-        col("actual_label").cast("long").as("actual_label"),
-        col("cos_e6"))
+    probe(querySet(base, 50), labelCentroids(base), 1)
+      .select(col("query_id").as("vec_id"),
+        col("cell").cast("long").as("predicted_label"),
+        col("q_label").cast("long").as("actual_label"),
+        col("cell_cos").as("cos_e6"))
       .orderBy(col("vec_id"))
   }
 
@@ -284,49 +325,25 @@ object Similarity {
     * check; the spec asserts structural invariants + recall vs brute
     * force. */
   def ivfTopk(spark: SparkSession, sfDir: String, k: Int = 5, nProbe: Int = 3): DataFrame = {
-    // base feeds centroids, assignment AND probing — materialized once
-    // per session via the shared memo (r18; was a per-call cut)
     val base = corpusCut(spark, sfDir)
-    val centroids = base
-      .select(col("label"), posexplode(col("emb")).as(Seq("dim", "x")))
-      .groupBy(col("label"), col("dim")).agg(avg(col("x")).as("m"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(col("dim"), col("m")))).as("parts"))
-      .select(col("label").as("cell"),
-        transform(col("parts"), p => p.getField("m")).as("c_emb"))
-      .withColumn("c_nrm", norm2(col("c_emb")))
-    // best cell per corpus vector IN-ROW against the broadcast
-    // centroid array — same e6-cosine, same (cell_cos, −cell)
-    // tie-break as the previous max_by argmax, so the assignment is
-    // bit-identical, but the corpus-wide groupBy shuffle is gone
-    // (r17, guide §2.4: at 100 TB the assign step is now scan + map).
-    val ca = broadcast(centsAsArray(centroids))
-    val assigned = base.crossJoin(ca)
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        bestCellStruct(col("emb"), col("nrm")).getField("cell").as("cell"))
-    // queries probe their nProbe closest cells — the |cells| fan-out
-    // happens on the 10-row query side only; the Window sorts a tiny
-    // frame
-    val qProbe = base.where(col("vec_id") < 10).crossJoin(ca)
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        explode(cellScores(col("emb"), col("nrm"))).as("sc"))
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        col("sc.cell").as("cell"), col("sc.cell_cos").as("cell_cos"))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cell_cos").desc, col("cell"))))
-      .where(col("prk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val sims = assigned.join(broadcast(qProbe), Seq("cell"))
+    ivfSearch(base, labelCentroids(base), k, nProbe)
+  }
+
+  /** The IVF spine shared by [[ivfTopk]] and [[ivfKmeansTopk]]: every
+    * corpus vector is assigned its best cell IN-ROW ([[assign]] — at
+    * 100 TB the assign step is scan + map, no corpus-wide argmax
+    * shuffle), each query [[probe]]s its nProbe closest cells, and the
+    * exact cosine ranks the probed cells' members. */
+  private def ivfSearch(base: DataFrame, cents: DataFrame, k: Int,
+      nProbe: Int): DataFrame = {
+    val assigned = assign(base, cents)
+      .select(col("vec_id"), col("emb"), col("nrm"), col("best.cell").as("cell"))
+    val sims = assigned.join(broadcast(probe(querySet(base), cents, nProbe)), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("cell").cast("long").as("cell"),
         cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(sims, k)
   }
 
   /** §2#299 IVF CELL HEALTH — the BATCH side of the index-maintenance
@@ -351,9 +368,10 @@ object Similarity {
     cellHealthOn(base, labelCentroids(base), driftE6)
   }
 
-  /** The default coarse quantizer [[cellHealth]] reports against:
-    * per-label mean centroids over `base` (the same quantizer the #52
-    * IVF queries probe through). (cell, c_emb, c_nrm) rows. */
+  /** Per-label mean centroids over `base` as (cell, c_emb, c_nrm) rows:
+    * the coarse quantizer of the #52 IVF query, the default one
+    * [[cellHealth]] and [[cellSplit]] report against, and the #47
+    * classifier's label cells. */
   private[graft] def labelCentroids(base: DataFrame): DataFrame =
     base
       .select(col("label"), posexplode(col("emb")).as(Seq("dim", "x")))
@@ -365,7 +383,7 @@ object Similarity {
       .withColumn("c_nrm", norm2(col("c_emb")))
 
   /** [[cellHealth]] against an EXPLICIT corpus + centroid table — the
-    * parameterized form (r16 verdict #2) that lets the batch↔stream
+    * parameterized form that lets the batch↔stream
     * reconciliation spec drive the SAME centroid array through this
     * and [[graft.streaming.StreamIvfMaintain]] and compare per-cell
     * (n_vecs, mean residual) verdicts over the materialized end
@@ -375,13 +393,10 @@ object Similarity {
   def cellHealthOn(base: DataFrame, centroids: DataFrame,
       driftE6: Long = 500000L): DataFrame = {
     graft.functions.Registry.ensure(base.sparkSession)
-    // per-row argmax against the broadcast centroid-array form (r17,
-    // guide §2.4): same e6-cosine, same (cell_cos, −cell) tie-break as
-    // the r16 vec-grain max_by — bit-identical (cell, resid) per
-    // vector — but the corpus-wide groupBy(vec_id) exchange is gone;
-    // the first and ONLY shuffle is the ≤|cells| health agg
-    val assigned = base.crossJoin(broadcast(centsAsArray(centroids)))
-      .select(bestCellStruct(col("emb"), col("nrm")).as("best"))
+    // per-row argmax against the broadcast centroid array: no
+    // corpus-wide groupBy(vec_id) exchange — the first and ONLY
+    // shuffle is the ≤|cells| health agg
+    val assigned = assign(base, centroids)
       .select(col("best.cell").as("cell"),
         (lit(1000000L) - col("best.cell_cos")).as("resid_e6"))
     val health = assigned.groupBy(col("cell").cast("long").as("cell"))
@@ -438,12 +453,9 @@ object Similarity {
       iters: Int = 2): DataFrame = {
     graft.functions.Registry.ensure(base.sparkSession)
     // stored codes: every vector's current cell + residual (the #299
-    // assignment, computed per-row against the broadcast centroid
-    // array — same values as the r16 vec-grain max_by, zero corpus
-    // shuffle; r17 guide §2.4); memoized — three consumers below
-    val assigned = base.crossJoin(broadcast(centsAsArray(centroids)))
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        bestCellStruct(col("emb"), col("nrm")).as("best"))
+    // assignment, per row, zero corpus shuffle); memoized — three
+    // consumers below
+    val assigned = assign(base, centroids)
       .select(col("vec_id"), col("emb"), col("nrm"),
         col("best.cell").cast("long").as("cell"),
         (lit(1000000L) - col("best.cell_cos")).as("resid_e6"))
@@ -464,8 +476,7 @@ object Similarity {
         col("c_emb"), col("c_nrm"))
     // re-parent ONLY the split cell's codes between the two children
     // (same per-row argmax form as the assignment above)
-    val reparented = pop.crossJoin(broadcast(centsAsArray(children)))
-      .select(bestCellStruct(col("emb"), col("nrm")).as("best"))
+    val reparented = assign(pop, children)
       .select(col("best.cell").as("cell"),
         (lit(1000000L) - col("best.cell_cos")).as("resid_e6"))
     val untouched = assigned.crossJoin(broadcast(target))
@@ -493,32 +504,24 @@ object Similarity {
     * element-wise [[graft.functions.VecSumDoubles]] aggregate (÷ the
     * group count) — no 64× posexplode, no per-dim second shuffle.
     * An iteration therefore moves ZERO corpus-sized shuffles: the
-    * only exchange carries ≤k partial (sum-array, count) rows
-    * (r17 optimization, guide §2.3/§2.4; was: per-iteration
-    * groupBy(vec_id) argmax over corpus×k rows + posexplode/avg —
-    * two corpus-scale aggregations). Assignment is bit-identical
-    * (same e6-cosine, same (cell_cos, −cell) ordering); centroid
-    * float sums re-associate, which every consumer tolerates
-    * (rows-kind paths only). Lineage cut per iteration. */
+    * only exchange carries ≤k partial (sum-array, count) rows (guide
+    * §2.3/§2.4). Centroid float sums re-associate, which every
+    * consumer tolerates (rows-kind paths only). Lineage cut per
+    * iteration. */
   private[operators] def kmeansCentroids(base: DataFrame, k: Int, iters: Int): DataFrame = {
-    val seedW = Window.orderBy(col("h"), col("vec_id"))
-    var cents = base
-      .withColumn("h", (col("vec_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L))
-      .orderBy(col("h"), col("vec_id")).limit(k) // k rows — driver-safe
-      .withColumn("cell", row_number().over(seedW).cast("long") - 1L)
+    var cents = hashSeeds(base, k, "cell")
       .select(col("cell"), col("emb").as("c_emb"), col("nrm").as("c_nrm"))
     if (iters == 0) return cents.transform(graft.Checkpoints.cut)
     for (it <- 1 to iters) {
-      val assigned = base.crossJoin(broadcast(centsAsArray(cents)))
-        .select(col("emb"),
-          bestCellStruct(col("emb"), col("nrm")).getField("cell").as("cell"))
+      val assigned = assign(base, cents)
+        .select(col("emb"), col("best.cell").as("cell"))
       val next = assigned
         .groupBy(col("cell"))
         .agg(vecSum(col("emb")).as("vs"), count(lit(1)).as("n"))
         .select(col("cell"),
           transform(col("vs"), x => x / col("n")).as("c_emb"))
         .withColumn("c_nrm", norm2(col("c_emb")))
-      // Cut ONLY the final iteration (r18, verdict #2): an
+      // Cut ONLY the final iteration: an
       // intermediate iteration is single-consumer (the next round's
       // broadcast), so its eager checkpoint job bought nothing — the
       // nested round now runs as a broadcast subtree inside the final
@@ -539,58 +542,9 @@ object Similarity {
   def ivfKmeansTopk(spark: SparkSession, sfDir: String, k: Int = 5,
       nCells: Int = 8, nProbe: Int = 3, iters: Int = 2): DataFrame = {
     val base = corpusCut(spark, sfDir)
-    val cents = kmeansCentroids(base, nCells, iters)
-    // per-row assignment off the broadcast centroid array — the
-    // corpus-wide argmax groupBy (one full shuffle) removed (r17,
-    // guide §2.4); cosine + tie-break identical to the max_by form
-    val ca = broadcast(centsAsArray(cents))
-    val assigned = base.crossJoin(ca)
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        bestCellStruct(col("emb"), col("nrm")).getField("cell").as("cell"))
-    // probe ranking fans out |cells| rows per QUERY only (tiny side)
-    val qProbe = base.where(col("vec_id") < 10).crossJoin(ca)
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        explode(cellScores(col("emb"), col("nrm"))).as("sc"))
-      .select(col("vec_id"), col("emb"), col("nrm"),
-        col("sc.cell").as("cell"), col("sc.cell_cos").as("cell_cos"))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("cell_cos").desc, col("cell"))))
-      .where(col("prk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("cell"))
-    val sims = assigned.join(broadcast(qProbe), Seq("cell"))
-      .where(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("cell"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    ivfSearch(base, kmeansCentroids(base, nCells, iters), k, nProbe)
   }
 
-  /** §2#77 Product-Quantization ANN with Asymmetric Distance
-    * Computation (Jégou et al., "Product Quantization for Nearest
-    * Neighbor Search", TPAMI 2011). The 64-dim space splits into m=8
-    * subspaces of 8 dims; each subspace gets its own 16-entry codebook
-    * (distributed Lloyd's, same shape as [[kmeansCentroids]] but
-    * trained per subspace in ONE pass — subspace is just an extra
-    * grouping key). Every corpus vector compresses to m 4-bit codes.
-    *
-    * Query time is the ADC trick: the query precomputes a (m × 16)
-    * table of partial dot products against every codebook entry — 128
-    * numbers, broadcast — and each corpus vector's approximate score is
-    * m TABLE LOOKUPS (the (s, code) join) summed, never a d-dim float
-    * dot. At 100 TB that's the difference between scanning 256-byte raw
-    * vectors and scanning 8-byte codes that live in memory: ~30×
-    * smaller scan + centroids-side norm reconstructed from the same
-    * table. Approximate by construction → rows-only check; the spec
-    * asserts recall vs brute force. */
-  /** PQ training + encoding over a UNIT-normalized (vec_id, emb)
-    * frame — the shared stages under [[pqAdcTopk]] and [[ivfPqTopk]]:
-    * returns (subs, cb, codes) = per-(vec, subspace) subvectors, the
-    * trained per-subspace codebooks, and the encoded corpus. */
   /** One row per (vec_id, subspace): the subDim-dim subvector of
     * `emb` — shared by PQ training/encoding and the query-side ADC
     * table construction (which must slice the QUERY vector even when
@@ -599,7 +553,7 @@ object Similarity {
     val subDim = 64 / m
     // an optional `cell` column rides along untouched: the IVF-PQ build
     // tags vectors with their coarse cell BEFORE slicing, so the
-    // inverted index needs no corpus-grain join-back (r18, guide §2.4)
+    // inverted index needs no corpus-grain join-back (guide §2.4)
     val extra = if (base.columns.contains("cell")) Seq(col("cell")) else Nil
     base
       .select(Seq(col("vec_id")) ++ extra ++ Seq(
@@ -619,7 +573,7 @@ object Similarity {
     * its broadcast `cb_arr`: argmin L2 (d2 = |sv|² − 2·sv·c + |c|²,
     * the identical expression the join form used), ties to the
     * smallest code — evaluated per row, so encoding needs NO
-    * corpus-sized groupBy shuffle (r17, guide §2.4). */
+    * corpus-sized groupBy shuffle (guide §2.4). */
   private def bestCode: Column =
     array_min(transform(col("cb_arr"), c =>
       struct(
@@ -627,23 +581,21 @@ object Similarity {
           + c.getField("c_sq")).as("d2"),
         c.getField("code").as("code")))).getField("code")
 
+  /** PQ training + encoding over a UNIT-normalized (vec_id, emb)
+    * frame — the shared stages under [[pqAdcTopk]] and [[ivfPqTopk]]:
+    * returns (cb, codes) = the trained per-subspace codebooks and the
+    * encoded corpus. */
   private def pqStages(base: DataFrame, m: Int, codesPerSub: Int,
-      iters: Int): (DataFrame, DataFrame, DataFrame) = {
+      iters: Int): (DataFrame, DataFrame) = {
     // one row per (vec_id, subspace): the 8-dim subvector
     val subs = subvectors(base, m)
       .withColumn("svsq", dot(col("sv"), col("sv")))
       .cut
     // codebook seeds: the bottom-codesPerSub vectors by multiplicative
-    // hash seed ALL m subspaces at once (cheap, deterministic, no
-    // collect). Lazy: the one-time seed subtree runs inside iteration
-    // 1's checkpoint job (r17 — two fewer eager jobs per build; the
-    // seed/initial-cb cuts bought nothing, both are single-consumer).
-    val seedIds = base
-      .withColumn("h", (col("vec_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L))
-      .orderBy(col("h"), col("vec_id")).limit(codesPerSub)
-      .withColumn("code",
-        row_number().over(Window.orderBy(col("h"), col("vec_id"))).cast("long") - 1L)
-      .select(col("vec_id"), col("code"))
+    // hash seed ALL m subspaces at once. Lazy: the one-time seed
+    // subtree runs inside iteration 1's checkpoint job — the seeds and
+    // the initial codebook are single-consumer, so a cut buys nothing.
+    val seedIds = hashSeeds(base, codesPerSub, "code").select(col("vec_id"), col("code"))
     var cb = subs.join(broadcast(seedIds), "vec_id")
       .select(col("s"), col("code"), col("sv").as("c_sv"))
       .withColumn("c_sq", dot(col("c_sv"), col("c_sv")))
@@ -652,14 +604,12 @@ object Similarity {
     // 100 TB you'd train on ~1e5 vectors and encode everything). The
     // hash-threshold sample is the same consistent-sampling trick as
     // sample_stratified. Lazy: a filter over subs' checkpoint blocks —
-    // re-filtering per iteration is cheaper than its own cut job (r17).
-    val train = subs.where(
-      (col("vec_id") % lit(1000000007L)) * lit(2654435761L) % lit(1000000007L) % lit(2L) === 0L)
+    // re-filtering per iteration is cheaper than its own cut job.
+    val train = subs.where(consistentHash(col("vec_id")) % lit(2L) === 0L)
     // Lloyd's per subspace: per-row argmin assign against the m-row
     // broadcast codebook-array form + single-pass vecSum mean per
-    // (s, code) — an iteration moves no corpus-sized shuffle (r17,
-    // guide §2.3/§2.4; was: groupBy(vec_id, s) min_by over corpus×m
-    // rows + 8× posexplode/avg + reassembly — three aggregations)
+    // (s, code) — an iteration moves no corpus-sized shuffle (guide
+    // §2.3/§2.4)
     for (it <- 1 to iters) {
       val assigned = train.join(broadcast(cbAsArray(cb)), Seq("s"))
         .select(col("s"), bestCode.as("code"), col("sv"))
@@ -669,7 +619,7 @@ object Similarity {
         .select(col("s"), col("code"),
           transform(col("vs"), x => x / col("n")).as("c_sv"))
         .withColumn("c_sq", dot(col("c_sv"), col("c_sv")))
-      // Cut ONLY the final iteration (r18, verdict #2) — same
+      // Cut ONLY the final iteration — same
       // reasoning as kmeansCentroids: intermediate codebooks are
       // single-consumer broadcast inputs; `subs` (the scan they fold
       // over) is already checkpointed, so dropping the eager
@@ -684,51 +634,57 @@ object Similarity {
     val codes = subs.join(broadcast(cbAsArray(cb)), Seq("s"))
       .select(Seq(col("vec_id")) ++ codeExtra ++
         Seq(col("s"), bestCode.as("code")): _*)
-    (subs, cb, codes)
+    (cb, codes)
   }
 
   /** ADC+R (Jégou §VI): the compressed scan only SHORTLISTS — the top
-    * `shortlist` candidates per query by approximate score — and the
-    * exact cosine re-ranks just those. The expensive raw-vector read
-    * touches shortlist·|queries| rows instead of the corpus, which is
-    * what makes exact-quality results affordable when the corpus
-    * lives as codes. `base` must be the unit-normalized corpus. */
+    * `shortlist` candidates per query by approximate `adc_cos_e6` — and
+    * the exact cosine re-ranks just those. The expensive raw-vector
+    * read touches shortlist·|queries| rows instead of the corpus, which
+    * is what makes exact-quality results affordable when the corpus
+    * lives as codes. `base` must be the unit-normalized corpus, so the
+    * exact cosine is just the dot product. */
   private def adcRerank(sims: DataFrame, base: DataFrame, k: Int,
-      shortlist: Int): DataFrame = {
-    val wAdc = Window.partitionBy(col("query_id"))
-      .orderBy(col("adc_cos_e6").desc, col("neighbor_id"))
-    val sl = sims.withColumn("srank", row_number().over(wAdc))
-      .where(col("srank") <= shortlist)
-      .select(col("query_id"), col("neighbor_id"))
-    val qVec = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val rescored = sl
-      .join(base.select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
-      .join(broadcast(qVec), "query_id")
-      // unit vectors → cosine is just the dot product
-      .select(col("query_id"), col("neighbor_id"),
-        scaled(dot(col("q_emb"), col("emb")), 1000000L).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
-  }
+      shortlist: Int): DataFrame =
+    rerank(firstN(sims, shortlist, "srank", score = "adc_cos_e6")
+        .select(col("query_id"), col("neighbor_id")),
+      base, k, scaled(dot(col("q_emb"), col("emb")), 1000000L))
 
+  /** The ADC lookup table: per (query, subspace, code) the partial dot
+    * of the query's subvector with the codebook entry — m × |codebook|
+    * numbers per query, the whole "distance computation" a code scan
+    * needs. Slices the RAW query vector whatever the codebooks were
+    * trained on: q·r decomposes per subspace either way. */
+  private def adcTable(base: DataFrame, cb: DataFrame, m: Int): DataFrame =
+    subvectors(firstIds(base, 10), m).join(cb, Seq("s"))
+      .select(col("vec_id").as("query_id"), col("s"), col("code"),
+        dot(col("sv"), col("c_sv")).as("pdot"))
+
+  /** §2#77 Product-Quantization ANN with Asymmetric Distance
+    * Computation (Jégou et al., "Product Quantization for Nearest
+    * Neighbor Search", TPAMI 2011). The 64-dim space splits into m=8
+    * subspaces of 8 dims; each subspace gets its own 16-entry codebook
+    * (distributed Lloyd's, same shape as [[kmeansCentroids]] but
+    * trained per subspace in ONE pass — subspace is just an extra
+    * grouping key). Every corpus vector compresses to m 4-bit codes.
+    *
+    * Query time is the ADC trick: the query precomputes a (m × 16)
+    * table of partial dot products against every codebook entry — 128
+    * numbers, broadcast — and each corpus vector's approximate score is
+    * m TABLE LOOKUPS (the (s, code) join) summed, never a d-dim float
+    * dot. At 100 TB that's the difference between scanning 256-byte raw
+    * vectors and scanning 8-byte codes that live in memory: ~30×
+    * smaller scan + centroids-side norm reconstructed from the same
+    * table. Approximate by construction → rows-only check; the spec
+    * asserts recall vs brute force. */
   def pqAdcTopk(spark: SparkSession, sfDir: String, k: Int = 5,
       m: Int = 8, codesPerSub: Int = 64, iters: Int = 2): DataFrame = {
-    graft.functions.Registry.ensure(spark)
     // L2-normalize BEFORE encoding: on unit vectors the ADC inner
     // product approximates cosine directly — no reconstructed-norm
     // division, whose quantization error would otherwise distort ranks
     val base = unitCut(spark, sfDir)
-    val (subs, cb, codes) = pqStages(base, m, codesPerSub, iters)
-    // ADC table: every (query, s, code) → partial dot (m × 16 entries
-    // per query — the whole "distance computation" a scan needs)
-    val table = subs.where(col("vec_id") < 10).join(cb, Seq("s"))
-      .select(col("vec_id").as("query_id"), col("s"), col("code"),
-        dot(col("sv"), col("c_sv")).as("pdot"))
-    val sims = codes.join(broadcast(table), Seq("s", "code"))
+    val (cb, codes) = pqStages(base, m, codesPerSub, iters)
+    val sims = codes.join(broadcast(adcTable(base, cb, m)), Seq("s", "code"))
       .where(col("vec_id") =!= col("query_id"))
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("pdot")).as("adc_dot"), count(lit(1)).as("nparts"))
@@ -796,37 +752,25 @@ object Similarity {
   private def computeIvfPqIndex(spark: SparkSession, sfDir: String,
       nCells: Int, m: Int, codesPerSub: Int, iters: Int,
       residual: Boolean): IvfPqIndex = {
-    graft.functions.Registry.ensure(spark)
     // unit vectors for the coarse stage — the shared memoized frame
     // plus a literal norm column (a projection over its blocks)
     val base = unitCut(spark, sfDir).withColumn("nrm", lit(1.0))
     val cents = kmeansCentroids(base, nCells, iters)
-    // coarse assignment per row off the broadcast centroid array: the
-    // winning struct carries the centroid, so the residual x − c(x) is
-    // computed IN the same row — the corpus-wide argmax groupBy AND
-    // the corpus⋈corpus residual join are both gone (r17, guide §2.4;
-    // assignment values identical to the max_by form)
-    val assignedAll = base.crossJoin(broadcast(centsAsArray(cents)))
-      .select(col("vec_id"), col("emb"),
-        bestCellStruct(col("emb"), col("nrm")).as("best"))
-      .select(col("vec_id"), col("emb"), col("best.cell").as("cell"),
-        col("best.c_emb").as("c_emb"))
-    val unit = base.select(col("vec_id"), col("emb"))
-    // what PQ sees: residuals (x − c) or the raw unit vectors. The
-    // coarse cell rides the row INTO the PQ stages (subvectors →
-    // codes carry it through), so the inverted index is `codes` as-is:
-    // the old codes ⋈ cellOf join — a corpus-grain vec_id shuffle of
-    // corpus×m code rows PLUS a full re-run of the lazy assignment
-    // scan to produce the cellOf side — is gone (r18, guide §2.4).
-    // Values are unchanged: cell comes from the same assignedAll row,
-    // codes from the same bestCode argmin over the same inputs.
-    val encInput = if (residual)
-      assignedAll.select(col("vec_id"), col("cell"),
-        zip_with(col("emb"), col("c_emb"), (x, c) => x - c).as("emb"))
-    else assignedAll.select(col("vec_id"), col("cell"), col("emb"))
-    val (_, cb, codes) = pqStages(encInput, m, codesPerSub, iters)
-    IvfPqIndex(cents, codes, cb, unit, m, residual)
+    val (cb, codes) = pqStages(ivfPqInput(base, cents, residual), m, codesPerSub, iters)
+    IvfPqIndex(cents, codes, cb, base.select(col("vec_id"), col("emb")), m, residual)
   }
+
+  /** What IVF-PQ encodes: each unit vector (vec_id, emb, nrm) tagged
+    * with its coarse cell, `emb` replaced by the residual x − c(x)
+    * when `residual`. The winning [[assign]] struct carries the
+    * centroid, so the residual is computed IN the assignment row — no
+    * corpus⋈corpus residual join — and the cell rides the row into the
+    * PQ stages, so the inverted index is the code table as-is. */
+  private[operators] def ivfPqInput(base: DataFrame, cents: DataFrame,
+      residual: Boolean): DataFrame =
+    assign(base, cents).select(col("vec_id"), col("best.cell").as("cell"),
+      (if (residual) zip_with(col("emb"), col("best.c_emb"), (x, c) => x - c)
+       else col("emb")).as("emb"))
 
   /** QUERY against an IVF-PQ index (inline-built or read back from
     * tables): probe assignment and the ADC table are computed from the
@@ -835,26 +779,10 @@ object Similarity {
   private[operators] def ivfPqQuery(idx: IvfPqIndex, k: Int = 5,
       nProbe: Int = 3): DataFrame = {
     val m = idx.m
-    // lazy: a ≤10-row filter over the unit table/checkpoint blocks —
-    // its three consumers re-filter cheaper than a cut job costs (r17)
-    val qVecs = idx.unit.where(col("vec_id") < 10)
-      .withColumn("nrm", lit(1.0))
-    val qProbe = qVecs.crossJoin(broadcast(idx.cents))
-      .select(col("vec_id"), col("cell"),
-        cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")).as("cell_cos"))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("cell_cos").desc, col("cell"))))
-      .where(col("prk") <= nProbe)
-      .select(col("vec_id").as("query_id"), col("cell"))
-    // the ADC table slices the RAW query vector regardless of what the
-    // codebooks were trained on: q·r decomposes per subspace either way
-    val table = subvectors(qVecs, m).join(idx.cb, Seq("s"))
-      .select(col("vec_id").as("query_id"), col("s"), col("code"),
-        dot(col("sv"), col("c_sv")).as("pdot"))
+    val qProbe = ivfPqProbe(idx, nProbe)
     val adcSums = idx.codesCell.join(broadcast(qProbe), Seq("cell"))
       .where(col("vec_id") =!= col("query_id"))
-      .join(broadcast(table), Seq("query_id", "s", "code"))
+      .join(broadcast(adcTable(idx.unit, idx.cb, m)), Seq("query_id", "s", "code"))
       .groupBy(col("query_id"), col("cell"), col("vec_id"))
       .agg(sum(col("pdot")).as("adc_dot"), count(lit(1)).as("nparts"))
       .where(col("nparts") === m) // every subspace contributed
@@ -862,8 +790,6 @@ object Similarity {
       // q·x = q·c(cell) + q·r — the centroid term, exact, per probe pair
       val qCellDot = qProbe
         .join(broadcast(idx.cents.select(col("cell"), col("c_emb"))), "cell")
-        .join(broadcast(qVecs.select(col("vec_id").as("query_id"),
-          col("emb").as("q_emb"))), "query_id")
         .select(col("query_id"), col("cell"),
           dot(col("q_emb"), col("c_emb")).as("qc_dot"))
       adcSums.join(broadcast(qCellDot), Seq("query_id", "cell"))
@@ -874,6 +800,13 @@ object Similarity {
         scaled(col("adc_dot"), 1000000L).as("adc_cos_e6"))
     adcRerank(sims, idx.unit, k, 10 * k)
   }
+
+  /** The (query_id, q_emb, q_nrm, cell, cell_cos) probe list of an
+    * IVF-PQ index: each unit query vector's nProbe nearest STORED
+    * centroids. A lazy ≤10-row filter over the unit table — its
+    * consumers re-filter cheaper than a cut job costs. */
+  private def ivfPqProbe(idx: IvfPqIndex, nProbe: Int): DataFrame =
+    probe(querySet(idx.unit.withColumn("nrm", lit(1.0))), idx.cents, nProbe)
 
   /** §2#191 PERSIST the IVF-PQ index as catalog tables — the
     * build-once / query-many production split. The code table (the
@@ -921,16 +854,7 @@ object Similarity {
       residual: Boolean = true): DataFrame = {
     graft.functions.Registry.ensure(spark)
     val idx = persistedIvfPqIndex(spark, name, m, residual)
-    val qVecs = idx.unit.where(col("vec_id") < 10)
-      .withColumn("nrm", lit(1.0))
-    val probedCells = qVecs.crossJoin(broadcast(idx.cents))
-      .select(col("vec_id"), col("cell"),
-        cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm")).as("cell_cos"))
-      .withColumn("prk", row_number().over(
-        Window.partitionBy(col("vec_id"))
-          .orderBy(col("cell_cos").desc, col("cell"))))
-      .where(col("prk") <= nProbe)
-      .select(col("cell")).distinct()
+    val probedCells = ivfPqProbe(idx, nProbe).select(col("cell")).distinct()
       .collect().map(_.getLong(0)).toSeq
     val pruned = idx.codesCell.where(col("cell").isin(probedCells: _*))
     ivfPqQuery(idx.copy(codesCell = pruned), k, nProbe)
@@ -957,15 +881,18 @@ object Similarity {
         .agg(count(lit(1)).as("n_hits"))
         .select(lit(method).as("method"), col("n_hits"),
           lit(nTruth).as("n_truth"),
-          expr(s"n_hits * 1000 div $nTruth").as("recall_pm"))
+          // an empty truth set (e.g. a one-vector corpus: a query never
+          // neighbours itself) has no recall — NULL, not div-by-zero
+          (if (nTruth == 0) lit(null).cast("long")
+           else expr(s"n_hits * 1000 div $nTruth")).as("recall_pm"))
     // The four rungs are independent and their builders run EAGER
     // checkpoint jobs during construction (ivf/sq8 materialize their
     // corpus frame; ivf_pq builds or reads the index memo) — construct
     // them concurrently from a small pool (guide §2.6) so one rung's
     // checkpoint tail back-fills the others' idle cores. Each frame is
     // deterministic and shares no mutable state, so the report is
-    // scheduling-independent (r17; was: four sequential build chains).
-    // Pool CLAMPED to the scheduler's core budget (r18, verdict #7):
+    // scheduling-independent.
+    // Pool CLAMPED to the scheduler's core budget:
     // 4 concurrent build chains oversubscribe an 8-core machine;
     // cores/4 keeps 32-core behavior identical (4 threads) while
     // small machines overlap only 2.
@@ -987,16 +914,6 @@ object Similarity {
     rungs.reduce(_ unionByName _)
       .orderBy(col("method"))
   }
-
-  /** x → (x − c(x)): each vector minus its assigned coarse centroid —
-    * exact by construction (centroid + residual reconstructs the
-    * vector bit-for-float), pinned by ResidualPqSpec. */
-  private[operators] def residualFrame(unit: DataFrame, cellOf: DataFrame,
-      cents: DataFrame): DataFrame =
-    unit.join(cellOf, "vec_id")
-      .join(broadcast(cents.select(col("cell"), col("c_emb"))), "cell")
-      .select(col("vec_id"),
-        zip_with(col("emb"), col("c_emb"), (x, c) => x - c).as("emb"))
 
   /** §2#141 SCALAR-quantized ANN (SQ8) — the memory rung between raw
     * vectors and PQ codes, and the simplest production compression
@@ -1023,7 +940,6 @@ object Similarity {
     * that survive the shortlist. */
   def sqTopk(spark: SparkSession, sfDir: String, k: Int = 5,
       shortlistFactor: Int = 4): DataFrame = {
-    graft.functions.Registry.ensure(spark)
     // L2-normalize first, like PQ: on unit vectors dot = cosine
     val base = unitCut(spark, sfDir)
     val stats = base.select(posexplode(col("emb")).as(Seq("d", "x")))
@@ -1041,58 +957,30 @@ object Similarity {
           (cent, s) => when(s > 0, round(cent / s)).otherwise(lit(0.0))
             .cast("long")).as("codes"))
     // per-query ADC prep: the scalar q·lo and the per-dim q_i·step_i row
-    val qPrep = base.where(col("vec_id") < 10).crossJoin(broadcast(stats))
-      .select(col("vec_id").as("query_id"),
-        dot(col("emb"), col("los")).as("qlo"),
-        zip_with(col("emb"), col("steps"), (q, s) => q * s).as("qsteps"))
+    val qPrep = querySet(base).crossJoin(broadcast(stats))
+      .select(col("query_id"),
+        dot(col("q_emb"), col("los")).as("qlo"),
+        zip_with(col("q_emb"), col("steps"), (q, s) => q * s).as("qsteps"))
     val sims = coded.join(broadcast(qPrep), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         scaled(
           col("qlo") + aggregate(
             zip_with(col("qsteps"), col("codes"), (a, c) => a * c),
             lit(0.0), (acc, x) => acc + x),
-          1000000L).as("sq_cos_e6"))
-    val wSq = Window.partitionBy(col("query_id"))
-      .orderBy(col("sq_cos_e6").desc, col("neighbor_id"))
-    val shortlist = sims.withColumn("srank", row_number().over(wSq))
-      .where(col("srank") <= shortlistFactor * k)
-      .select(col("query_id"), col("neighbor_id"))
-    val qVec = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"))
-    val rescored = shortlist
-      .join(base.select(col("vec_id").as("neighbor_id"), col("emb")), "neighbor_id")
-      .join(broadcast(qVec), "query_id")
-      .select(col("query_id"), col("neighbor_id"),
-        scaled(dot(col("q_emb"), col("emb")), 1000000L).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    rescored.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+          1000000L).as("adc_cos_e6"))
+    adcRerank(sims, base, k, shortlistFactor * k)
   }
 
   /** §2#31 k-NN label vote: predict each query vector's label from its
     * 10 exact nearest neighbors' majority label. */
   def knnLabelVote(spark: SparkSession, sfDir: String): DataFrame = {
-    // shared memoized base (r18): was two raw corpus scans per call
     val base = corpusCut(spark, sfDir)
-    val q = base.where(col("vec_id") < 50)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"), col("label").as("actual_label"))
-    val sims = base.join(broadcast(q),
-        col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("actual_label"), col("label"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("label"))
-    val votes = sims.withColumn("rank", row_number().over(w))
-      .where(col("rank") <= 10)
+    val sims = exactPairs(base, querySet(base, 50), lit(true),
+      col("q_label").as("actual_label"), col("label"))
+    val votes = firstN(sims, 10, "rank", tie = "label")
       .groupBy(col("query_id"), col("actual_label"), col("label"))
       .agg(count(lit(1)).as("n_votes"))
-    val wv = Window.partitionBy(col("query_id"))
-      .orderBy(col("n_votes").desc, col("label"))
-    votes.withColumn("vr", row_number().over(wv))
-      .where(col("vr") === 1)
+    firstN(votes, 1, "vr", score = "n_votes", tie = "label")
       .select(col("query_id"), col("label").cast("long").as("predicted_label"),
         col("actual_label").cast("long").as("actual_label"),
         when(col("label") === col("actual_label"), 1L).otherwise(0L).as("correct"))
@@ -1115,21 +1003,9 @@ object Similarity {
     * scan IS the right plan, and at 100 TB the same query routes to
     * the label's IVF cells instead. */
   def filteredTopk(spark: SparkSession, sfDir: String, k: Int = 5): DataFrame = {
-    // shared memoized base (r18): was two raw corpus scans per call
     val base = corpusCut(spark, sfDir)
-    val q = base.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("emb").as("q_emb"), col("nrm").as("q_nrm"))
-    val sims = base.join(broadcast(q),
-        col("label") === col("q_label") && col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        col("label").cast("long").as("label"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("cos_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_e6").desc, col("neighbor_id"))
-    sims.withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .orderBy(col("query_id"), col("rank"))
+    topK(exactPairs(base, querySet(base), col("label") === col("q_label"),
+      col("label").cast("long").as("label")), k)
   }
 
   /** §2#167 MMR-DIVERSIFIED top-k (Maximal Marginal Relevance,
@@ -1148,25 +1024,14 @@ object Similarity {
     * selection order is exactly reproducible cross-partitioning. */
   def mmrTopk(spark: SparkSession, sfDir: String, k: Int = 5,
       nCand: Int = 20, lambdaPm: Long = 700L): DataFrame = {
-    // shared memoized base (r18): `c` feeds the query side, the scored
-    // scan AND the candidate join-back — three raw corpus re-scans
     val c = corpusCut(spark, sfDir)
-    val q = c.where(col("vec_id") < 10)
-      .select(col("vec_id").as("query_id"), col("emb").as("q_emb"),
-        col("nrm").as("q_nrm"))
     // rank on (ids, score) ONLY — carrying the 64-double vectors into
     // the top-nCand window would shuffle |corpus|×|queries| embeddings
     // to keep 20 per query; the ≤ |queries|·nCand survivors join back
     // to the corpus for their vectors (tiny side broadcast, corpus
     // streams map-side)
-    val sims = c.join(broadcast(q), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id").as("neighbor_id"),
-        cosPre(col("q_emb"), col("q_nrm"), col("emb"), col("nrm")).as("rel_e6"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rel_e6").desc, col("neighbor_id"))
-    val candIds = sims.withColumn("rk", row_number().over(w))
-      .where(col("rk") <= nCand)
-      .select(col("query_id"), col("neighbor_id"), col("rel_e6"))
+    val candIds = firstN(exactPairs(c, querySet(c), lit(true)), nCand, "rk")
+      .select(col("query_id"), col("neighbor_id"), col("cos_e6").as("rel_e6"))
     val cands = c.select(col("vec_id").as("neighbor_id"),
         col("emb"), col("nrm"))
       .join(broadcast(candIds), "neighbor_id")

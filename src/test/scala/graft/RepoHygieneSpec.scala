@@ -22,6 +22,10 @@ class RepoHygieneSpec extends AnyFunSuite {
       .toSeq
   }
 
+  private def occurrences(p: Path, s: String): Int =
+    new String(Files.readAllBytes(p), "UTF-8")
+      .split(java.util.regex.Pattern.quote(s), -1).length - 1
+
   test("no source file contains raw control bytes below 0x09") {
     val offenders = (scalaFiles("src/main") ++ scalaFiles("src/test"))
       .flatMap { p =>
@@ -180,6 +184,27 @@ class RepoHygieneSpec extends AnyFunSuite {
         .exists(l => l.contains("SparkSession.builder") && !l.trim.startsWith("*")))
     assert(offenders.isEmpty,
       s"SparkSession.builder outside Harness.scala/GraftMain.scala: $offenders — use graft.Harness.session")
+  }
+
+  test("Similarity: one query-set filter and one ranking window") {
+    // every ANN query is the same spine (query set, candidates, exact
+    // re-rank, rank); a second `where(col("vec_id") < …)` or a second
+    // partitioned window in Similarity is a hand copy of a step the
+    // rungs must share to stay comparable against exact search
+    val src = Paths.get("src/main/scala/graft/operators/Similarity.scala")
+    assert(occurrences(src, "where(col(\"vec_id\") <") === 1,
+      "query-set filters in Similarity — use Similarity.firstIds / querySet")
+    assert(occurrences(src, "Window.partitionBy(") === 1,
+      "ranking windows in Similarity — use Similarity.firstN / topK")
+  }
+
+  test("one copy of the consistent-sampling hash in src/main") {
+    // the hash gates sampling and pipeline queries the oracle checks
+    // bit-exactly; a second spelling of it can drift in association or
+    // literals and silently move every sampled row
+    val copies = scalaFiles("src/main")
+      .map(occurrences(_, "1000000007L)) * lit(2654435761L)")).sum
+    assert(copies === 1, s"$copies copies of the hash — use Fns.consistentHash")
   }
 
   test("no min(affineHash( in src/main: one MinHash signature builder") {

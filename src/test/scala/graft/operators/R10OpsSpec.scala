@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSuite
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,6 +22,25 @@ class R10OpsSpec extends SparkSuite {
     assert(byMethod("lsh") >= 700, s"lsh recall ${byMethod("lsh")}")
     assert(byMethod("ivf_pq") >= 400, s"ivf_pq recall ${byMethod("ivf_pq")}")
     assert(byMethod("sq8") >= 800, s"sq8 recall ${byMethod("sq8")}")
+  }
+
+  test("ann_recall_report: an empty truth set gives a NULL recall_pm, not a divide-by-zero") {
+    // one vector: no query has a neighbor, so the exact top-k is empty
+    val dir = java.nio.file.Files.createTempDirectory("graft-one-vec").toString
+    try {
+      spark.createDataFrame(java.util.Arrays.asList(
+          Row(0L, (0 until 64).map(i => (i + 1).toFloat), 3)),
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(FloatType)),
+          StructField("label", IntegerType))))
+        .write.parquet(s"$dir/embeddings.parquet")
+      val rows = Similarity.recallReport(spark, dir).collect()
+      assert(rows.map(_.getString(0)).toSeq === Seq("ivf", "ivf_pq", "lsh", "sq8"))
+      rows.foreach { r =>
+        assert(r.getLong(1) === 0L && r.getLong(2) === 0L, s"${r.getString(0)}: $r")
+        assert(r.isNullAt(3), s"${r.getString(0)} recall_pm must be NULL: $r")
+      }
+    } finally new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively()
   }
 
   test("dedup_incremental_minhash: matches point into the existing partition; near-dups exist; deterministic") {

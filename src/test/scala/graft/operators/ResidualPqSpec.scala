@@ -22,16 +22,9 @@ class ResidualPqSpec extends SparkSuite {
   test("reconstruction identity: centroid + residual == vector (exact float add)") {
     val base = unitCorpus.localCheckpoint(true)
     val cents = Similarity.kmeansCentroids(base, 8, 2)
-    val cellOf = base.crossJoin(broadcast(cents))
-      .select(col("vec_id"),
-        Similarity.cosPre(col("emb"), col("nrm"), col("c_emb"), col("c_nrm"))
-          .as("cell_cos"), col("cell"))
-      .groupBy(col("vec_id"))
-      .agg(max_by(col("cell"), struct(col("cell_cos"), -col("cell"))).as("cell"))
-    val res = Similarity.residualFrame(
-      base.select(col("vec_id"), col("emb")), cellOf, cents)
-    val rebuilt = res.select(col("vec_id"), col("emb").as("r"))
-      .join(cellOf, "vec_id")
+    // the frame the IVF-PQ build hands to PQ: cell-tagged residuals
+    val res = Similarity.ivfPqInput(base, cents, residual = true)
+    val rebuilt = res.select(col("vec_id"), col("cell"), col("emb").as("r"))
       .join(broadcast(cents.select(col("cell"), col("c_emb"))), "cell")
       .join(base.select(col("vec_id"), col("emb").as("x")), "vec_id")
       .select(col("vec_id"),
@@ -42,7 +35,11 @@ class ResidualPqSpec extends SparkSuite {
     val worst = rebuilt.agg(max(col("max_err"))).head.getDouble(0)
     // (x − c) + c differs from x only by float re-association — ~1e-16
     assert(worst < 1e-12, s"reconstruction drifted: $worst")
-    assert(res.count() === base.count())
+    assert(rebuilt.count() === base.count())
+    // the raw variant encodes the unit vectors untouched
+    val raw = Similarity.ivfPqInput(base, cents, residual = false)
+      .join(base.select(col("vec_id"), col("emb").as("x")), "vec_id")
+    assert(raw.where(col("emb") =!= col("x")).count() === 0L)
   }
 
   test("residual recall@5 >= raw recall@5 on the worst-case corpus (and both sane)") {
