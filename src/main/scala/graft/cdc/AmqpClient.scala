@@ -88,21 +88,36 @@ private[cdc] object AmqpWire {
     * (type+channel+size+end); a `frameMax` of 0 (the spec's Tune
     * sentinel) means unlimited. An empty body has no body frame. */
   def publishFrames(channel: Int, routingKey: String, body: Array[Byte],
-      frameMax: Long): Array[Byte] = {
+      frameMax: Long): Array[Byte] =
+    publishRunFrames(channel, routingKey, Seq(body), frameMax)
+
+  /** A run of publishes on one channel: each body's [[publishFrames]],
+    * concatenated in order into one array, so the run is one socket
+    * write. */
+  def publishRunFrames(channel: Int, routingKey: String,
+      bodies: Seq[Array[Byte]], frameMax: Long): Array[Byte] = {
     val m = basicPublish(routingKey)
-    val h = contentHeader(body.length.toLong)
-    val chunk =
+    val h = contentHeader(0L) // body size patched in per publish
+    def chunk(body: Array[Byte]): Int =
       if (frameMax <= 8) body.length.max(1)
       else math.min(frameMax - 8, Int.MaxValue.toLong).toInt
-    val bodyFrames = ((body.length.toLong + chunk - 1) / chunk).toInt
-    val buf = ByteBuffer.allocate(m.length + h.length + body.length + 8 * (2 + bodyFrames))
-    putFrame(buf, FrameMethod, channel, m, 0, m.length)
-    putFrame(buf, FrameHeader, channel, h, 0, h.length)
-    var off = 0
-    while (off < body.length) {
-      val n = math.min(chunk, body.length - off)
-      putFrame(buf, FrameBody, channel, body, off, n)
-      off += n
+    val size = bodies.iterator.map { b =>
+      val c = chunk(b)
+      m.length + h.length + b.length + 8L * (2 + (b.length.toLong + c - 1) / c)
+    }.sum
+    require(size <= Int.MaxValue, s"publish run of $size bytes")
+    val buf = ByteBuffer.allocate(size.toInt)
+    bodies.foreach { body =>
+      putFrame(buf, FrameMethod, channel, m, 0, m.length)
+      ByteBuffer.wrap(h).putLong(4, body.length.toLong)
+      putFrame(buf, FrameHeader, channel, h, 0, h.length)
+      val c = chunk(body)
+      var off = 0
+      while (off < body.length) {
+        val n = math.min(c, body.length - off)
+        putFrame(buf, FrameBody, channel, body, off, n)
+        off += n
+      }
     }
     buf.array()
   }
@@ -150,16 +165,18 @@ private[cdc] object AmqpWire {
   * confirms): the reference never consumes.
   *
   * Concurrency model: ONE connection, a POOL of channels. Each
-  * publishing task borrows a channel id from the pool, encodes its
-  * method/header/body frames into one array ([[AmqpWire.publishFrames]])
+  * publishing task borrows a channel id from the pool, encodes the
+  * method/header/body frames of a publish — or of a whole run of them
+  * ([[publishAll]], [[AmqpWire.publishRunFrames]]) — into one array
   * outside any lock, and hands that array to the socket in one write
-  * under the socket lock — so a publish costs one system call, the
-  * lock is held only for that write, and no other frame can land
-  * inside a channel's method→header→body sequence. The channel id is
-  * held across a confirm-mode wait for the broker's ack, so publishers
-  * on other channels keep writing meanwhile. The broker sees one socket
-  * per JVM. The reference is single-threaded on one channel
-  * (queues.rs:17-29); the pool is the distributed analogue.
+  * under the socket lock — so a run of publishes costs one system
+  * call (without confirms; with them, each publish is its own run),
+  * the lock is held only for that write, and no other frame can land
+  * inside a channel's method→header→body sequence. The channel id
+  * is held across a confirm-mode wait for the broker's ack, so
+  * publishers on other channels keep writing meanwhile. The broker
+  * sees one socket per JVM. The reference is single-threaded on one
+  * channel (queues.rs:17-29); the pool is the distributed analogue.
   *
   * `confirms = true` (off by default — the reference's publish is
   * fire-and-forget, queues.rs:44-64) negotiates RabbitMQ publisher
@@ -294,23 +311,38 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
     * byte of the publish has been handed to the kernel — the relay's
     * cursor commit relies on that. In confirm mode, blocks until the
     * broker acks this channel's delivery. */
-  def publish(queue: String, body: Array[Byte]): Unit = {
+  def publish(queue: String, body: Array[Byte]): Unit = withChannel { ch =>
+    send(publishFrames(ch, queue, body, frameMaxBytes))
+    if (confirms) {
+      acks(ch).poll(confirmTimeoutMs, TimeUnit.MILLISECONDS) match {
+        case null => throw new java.io.IOException(
+          s"publisher confirm timed out after ${confirmTimeoutMs}ms")
+        case Left(reason) => throw new java.io.IOException(
+          s"publish not confirmed: $reason")
+        case Right(_) => ()
+      }
+    }
+  }
+
+  /** A run of persistent publishes, in order, on one borrowed channel:
+    * every body's frames encoded into one array and written to the
+    * socket in one write. Same guarantee as [[publish]] when it
+    * returns. In confirm mode each body is its own [[publish]], which
+    * waits for its ack. */
+  def publishAll(queue: String, bodies: Seq[Array[Byte]]): Unit =
+    if (confirms) bodies.foreach(publish(queue, _))
+    else if (bodies.nonEmpty) withChannel { ch =>
+      send(publishRunFrames(ch, queue, bodies, frameMaxBytes))
+    }
+
+  private def withChannel(f: Int => Unit): Unit = {
     if (confirms) ensureReader()
     val ch: Int = pool.take()
     try {
       // drop acks that leaked from an aborted predecessor on this
       // channel (e.g. a confirm that timed out, then arrived late)
       if (confirms) acks(ch).clear()
-      send(publishFrames(ch, queue, body, frameMaxBytes))
-      if (confirms) {
-        acks(ch).poll(confirmTimeoutMs, TimeUnit.MILLISECONDS) match {
-          case null => throw new java.io.IOException(
-            s"publisher confirm timed out after ${confirmTimeoutMs}ms")
-          case Left(reason) => throw new java.io.IOException(
-            s"publish not confirmed: $reason")
-          case Right(_) => ()
-        }
-      }
+      f(ch)
     } finally { pool.put(ch); () }
   }
 
@@ -343,12 +375,19 @@ final class AmqpClient(host: String, port: Int, user: String = "guest",
   * Spark tasks never close what they open, and one socket per task per
   * micro-batch exhausts broker connection limits within hours. Tasks
   * sharing the connection publish concurrently on its channel pool;
-  * each publish is one socket write inside [[AmqpClient]] (the
-  * reference holds one connection in its single-process loop,
-  * queues.rs:17-29; one per executor JVM is the distributed
-  * analogue). */
+  * each publish, or run of publishes, is one socket write inside
+  * [[AmqpClient]] (the reference holds one connection in its
+  * single-process loop, queues.rs:17-29; one per executor JVM is the
+  * distributed analogue). */
 class AmqpQueue(val addr: String) extends MessageQueue {
   private val (_, _, _, _, queue) = AmqpQueue.parse(addr) // validate eagerly
+
+  override def publish(data: Array[Byte]): Unit = withClient(_.publish(queue, data))
+
+  /** One socket write per run (confirm mode: one publish and ack per
+    * message), see [[AmqpClient.publishAll]]. */
+  override def publishAll(data: Seq[Array[Byte]]): Unit =
+    withClient(_.publishAll(queue, data))
 
   /** On an I/O failure the cached client is EVICTED before the error
     * propagates: the connection is dead, and without eviction every
@@ -356,9 +395,9 @@ class AmqpQueue(val addr: String) extends MessageQueue {
     * restart — the reference instead reconnects in its retry loop
     * (src/main.rs:140-198), and eviction + task retry is the
     * distributed analogue of that redial. */
-  override def publish(data: Array[Byte]): Unit = {
+  private def withClient(f: AmqpClient => Unit): Unit = {
     val c = AmqpQueue.clientFor(addr)
-    try c.publish(queue, data)
+    try f(c)
     catch {
       case e: java.io.IOException => AmqpQueue.evict(addr, c); throw e
     }

@@ -1,6 +1,5 @@
 package graft.cdc
 
-import java.nio.charset.StandardCharsets.UTF_8
 import scala.concurrent.Await
 import scala.concurrent.duration._
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
@@ -29,9 +28,13 @@ class InvalidCursorException(msg: String) extends RuntimeException(msg)
   * are narrow maps; publish parallelism = partition count; each
   * partition folds its resolved timestamps into a max accumulator (or
   * an observed aggregate on the changefeed-log sink), so there is no
-  * global step and no second read of the source. The cursor commits
-  * after the batch's publishes, so the pipeline is at-least-once into
-  * the queue (same semantics as the reference).
+  * global step and no second read of the source. A payload stays the
+  * UTF-8 bytes the source read: the envelope is built on those bytes,
+  * reaches the task as a binary column and is published as is, with
+  * each queue taking a task's payloads in runs of at least 256 KiB
+  * ([[PublishRun]]; one socket write per run on AMQP). The cursor
+  * commits after the batch's publishes, so the pipeline is
+  * at-least-once into the queue (same semantics as the reference).
   */
 class ChangefeedPipeline(
     queue: MessageQueue,
@@ -97,12 +100,13 @@ class ChangefeedPipeline(
     val resolvedUs = when(isResolved, Changefeed.resolvedUsCol)
     // one row per feed row, at most one of payload / dead / resolved_us
     // non-null: what to publish, what to dead-letter, what to fold into
-    // the batch's cursor
+    // the batch's cursor. Payloads are binary, so they reach the task as
+    // the Array[Byte] a queue publishes, never decoded to a String.
     val routed = Seq(
       col("tbl"),
-      when(good, Changefeed.payloadCol).as("payload"),
+      when(good, Changefeed.payloadCol).cast("binary").as("payload"),
       (if (dlq.isDefined) when(malformed, col("value"))
-       else lit(null).cast("string")).as("dead"),
+       else lit(null)).cast("binary").as("dead"),
       resolvedUs.as("resolved_us"))
     val maxResolved = new MaxLongAccumulator
     spark.sparkContext.register(maxResolved, "graft.max_resolved_us")
@@ -118,12 +122,11 @@ class ChangefeedPipeline(
             // a DLQ needs per-row publishing the DSv2 write cannot do,
             // so with one configured this path reads the batch twice
             dlq.foreach { dq =>
-              batch.where(malformed).select(col("value"))
+              batch.where(malformed).select(col("value").cast("binary"))
                 .foreachPartition { (it: Iterator[Row]) =>
-                  it.foreach { r =>
-                    dq.publish(r.getString(0).getBytes(UTF_8))
-                    dlqAcc.add(1L)
-                  }
+                  val dead = new PublishRun(dq, dlqAcc)
+                  it.foreach(r => dead.add(r.getAs[Array[Byte]](0)))
+                  dead.flush()
                 }
             }
             // whole-batch publish through the DSv2 sink: one atomic
@@ -143,10 +146,12 @@ class ChangefeedPipeline(
             commitCursor(Option(m.getAs[java.lang.Long]("max_resolved")).map(_.longValue))
           case _ =>
             // every row-publish path — single queue, per-table router,
-            // DLQ — is ONE foreachPartition: publish or dead-letter each
-            // row and fold resolved timestamps into `maxResolved`. The
-            // cursor commits after the action returns, i.e. after every
-            // publish of the batch: at-least-once into the queue.
+            // DLQ — is ONE foreachPartition: buffer or dead-letter each
+            // row and fold resolved timestamps into `maxResolved`. Each
+            // target queue takes its payloads in runs (PublishRun), the
+            // last run flushed before the task returns; the cursor
+            // commits after the action returns, i.e. after every publish
+            // of the batch: at-least-once into the queue.
             maxResolved.reset()
             batch.select(routed: _*).foreachPartition { (it: Iterator[Row]) =>
               // MULTI-TABLE fan-out (the streaming form of
@@ -156,24 +161,24 @@ class ChangefeedPipeline(
               // over a multi-table feed and routes each change row to
               // the queue named after ITS table tag. Queue handles are
               // resolved once per (partition, table), not per record.
-              val perTable =
-                scala.collection.mutable.HashMap.empty[String, MessageQueue]
+              val runs = scala.collection.mutable.HashMap.empty[String, PublishRun]
+              val dead = dlq.map(new PublishRun(_, dlqAcc))
               it.foreach { r =>
                 if (!r.isNullAt(1)) {
-                  val target = router match {
+                  val run = router match {
                     case Some(make) =>
-                      perTable.getOrElseUpdate(r.getString(0), make(r.getString(0)))
-                    case None => q
+                      val t = r.getString(0)
+                      runs.getOrElseUpdate(t, new PublishRun(make(t), acc))
+                    case None => runs.getOrElseUpdate("", new PublishRun(q, acc))
                   }
-                  target.publish(r.getString(1).getBytes(UTF_8))
-                  acc.add(1L)
-                } else if (!r.isNullAt(2)) {
-                  dlq.get.publish(r.getString(2).getBytes(UTF_8))
-                  dlqAcc.add(1L)
-                } else if (!r.isNullAt(3)) maxResolved.add(r.getLong(3))
+                  run.add(r.getAs[Array[Byte]](1))
+                } else if (!r.isNullAt(2)) dead.get.add(r.getAs[Array[Byte]](2))
+                else if (!r.isNullAt(3)) maxResolved.add(r.getLong(3))
                 else if (!r.isNullAt(0)) throw new IllegalStateException(
                   s"change row of table ${r.getString(0)} has a null key or value")
               }
+              runs.valuesIterator.foreach(_.flush())
+              dead.foreach(_.flush())
             }
             commitCursor(if (maxResolved.isZero) None else Some(maxResolved.value))
         }
@@ -282,6 +287,34 @@ object ChangefeedPipeline {
       } finally st.close()
     }
   }
+}
+
+/** One task's payloads bound for one queue, handed to
+  * [[MessageQueue.publishAll]] in runs of at least
+  * [[PublishRun.FlushBytes]] — an AMQP queue writes a run to its socket
+  * at once — with `sent` counting each run as it goes. The task must
+  * `flush` before it returns, so that its batch's cursor commits only
+  * after every payload reached the queue. */
+private[cdc] final class PublishRun(queue: MessageQueue, sent: LongAccumulator) {
+  private val bodies = scala.collection.mutable.ArrayBuffer.empty[Array[Byte]]
+  private var bytes = 0L
+
+  def add(body: Array[Byte]): Unit = {
+    bodies += body
+    bytes += body.length
+    if (bytes >= PublishRun.FlushBytes) flush()
+  }
+
+  def flush(): Unit = if (bodies.nonEmpty) {
+    queue.publishAll(bodies.toSeq)
+    sent.add(bodies.size.toLong)
+    bodies.clear()
+    bytes = 0L
+  }
+}
+
+private[cdc] object PublishRun {
+  val FlushBytes: Long = 256L * 1024
 }
 
 /** Largest value added across a job's tasks; zero (nothing added) reads

@@ -14,8 +14,14 @@ import scala.jdk.CollectionConverters._
   * the impls here are the test/local equivalents.
   */
 trait MessageQueue extends Serializable {
-  /** Publish one message; called per record from executor tasks. */
+  /** Publish one message. */
   def publish(data: Array[Byte]): Unit
+
+  /** Publish a run of messages in order — what the pipeline's tasks call,
+    * with runs of at least 256 KiB and the rest at the end of a task.
+    * When it returns, every message is published as `publish` would
+    * have it; a queue that can hand a run over at once overrides it. */
+  def publishAll(data: Seq[Array[Byte]]): Unit = data.foreach(publish)
 }
 
 /** In-memory queue registry (the RabbitMQ stand-in for tests/local

@@ -446,9 +446,8 @@ class ChangefeedMicroBatchStream(dir: String, startCursorUs: Option[Long],
   @volatile private var availableNowEndUs: Option[Long] = None
 
   private def maxAvailableUs: Long = {
-    val segs = ChangefeedLog.listSegments(dir)
     val base = startCursorUs.getOrElse(-1L)
-    if (segs.isEmpty) base else math.max(base, segs.map(_.lastUs).max)
+    ChangefeedLog.maxLastUs(dir).fold(base)(math.max(base, _))
   }
 
   override def initialOffset(): Offset = {
@@ -656,27 +655,26 @@ case class ChangefeedReaderFactory(
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[ChangefeedPartition]
-    // pruned projection: only the requested fields are materialized
-    // (UTF8String conversion of an unread value/key never happens)
-    val extract: Array[ChangefeedLog.Record => Any] = fieldNames.map {
-      case "sort_us" => (r: ChangefeedLog.Record) => r.sortUs
-      case "tbl" => (r: ChangefeedLog.Record) =>
-        r.tbl.map(UTF8String.fromString).orNull
-      case "key" => (r: ChangefeedLog.Record) =>
-        r.key.map(UTF8String.fromString).orNull
-      case "value" => (r: ChangefeedLog.Record) =>
-        UTF8String.fromString(r.value)
+    // pruned projection: only the requested fields are materialized; the
+    // text fields are UTF8String slices of the segment's bytes, so an
+    // unread value or key is neither unescaped nor copied
+    val extract: Array[ChangefeedLog.SegmentReader => Any] = fieldNames.map {
+      case "sort_us" => (r: ChangefeedLog.SegmentReader) => r.sortUs
+      case "tbl" => (r: ChangefeedLog.SegmentReader) => r.tbl
+      case "key" => (r: ChangefeedLog.SegmentReader) => r.key
+      case "value" => (r: ChangefeedLog.SegmentReader) => r.value
       case other => throw new IllegalArgumentException(
         s"graft-changefeed has no column '$other'")
     }
     new PartitionReader[InternalRow] {
-      private val it = ChangefeedLog
-        .readSegment(java.nio.file.Paths.get(p.file))
-        .filter(r => r.sortUs > p.startUs && r.sortUs <= p.endUs)
-      private var current: ChangefeedLog.Record = _
-      override def next(): Boolean = { val has = it.hasNext; if (has) current = it.next(); has }
+      private val r = ChangefeedLog.openSegment(java.nio.file.Paths.get(p.file))
+      override def next(): Boolean = {
+        var has = r.next()
+        while (has && (r.sortUs <= p.startUs || r.sortUs > p.endUs)) has = r.next()
+        has
+      }
       override def get(): InternalRow =
-        new GenericInternalRow(extract.map(f => f(current)))
+        new GenericInternalRow(extract.map(f => f(r)))
       override def close(): Unit = ()
     }
   }

@@ -4,6 +4,8 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.unsafe.types.UTF8String
+
 /** On-disk layout of a changefeed log — the durable stand-in for the
   * reference's live CockroachDB changefeed cursor (src/main.rs:205-221):
   * an append-only directory of immutable segment files, each covering a
@@ -32,11 +34,46 @@ object ChangefeedLog {
   final case class Record(sortUs: Long, tbl: Option[String],
       key: Option[String], value: String)
 
-  // optional -t<tag> = table-routed segment: tn (resolved/NULL tbl) or
-  // tx<hex-utf8-of-table-name> (hex keeps arbitrary table names inside
-  // the filename grammar)
-  private val SegmentName =
-    raw"seg-(\d+)-(\d+)-([0-9a-zA-Z]+)(?:-t(n|x[0-9a-f]*))?\.log".r
+  /** The segment a file name denotes, or None: the name must be
+    * `seg-<firstUs>-<lastUs>-<id>[-t<tag>].log`, the numbers ASCII
+    * digits and the id ASCII letters and digits. The optional -t<tag>
+    * marks a table-routed segment: tn (resolved/NULL tbl) or
+    * tx<hex-utf8-of-table-name> (hex keeps arbitrary table names inside
+    * the filename grammar). A hand scan, not a regex: a streaming
+    * source parses every name in the log each time it polls. */
+  private[sources] def segmentOf(p: Path, name: String): Option[Segment] = {
+    val end = name.length - ".log".length
+    var i = "seg-".length
+    // Int, not Char, predicates: Function1 is specialized on Int, so a
+    // scan boxes nothing
+    def scan(ok: Int => Boolean): Boolean = {
+      val from = i
+      while (i < end && ok(name.charAt(i))) i += 1
+      i > from
+    }
+    def digit(c: Int): Boolean = c >= '0' && c <= '9'
+    def number(): String = {
+      val from = i
+      if (scan(digit) && i < end && name.charAt(i) == '-') { i += 1; name.substring(from, i - 1) }
+      else null
+    }
+    if (!name.startsWith("seg-") || !name.endsWith(".log")) return None
+    val first = number()
+    val last = if (first == null) null else number()
+    if (last == null ||
+        !scan(c => digit(c) || (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))) return None
+    val tag =
+      if (i == end) None
+      else if (name.startsWith("-tn", i)) { i += 3; Some("n") }
+      else if (name.startsWith("-tx", i)) {
+        val from = i + 2
+        i += 3
+        scan(c => digit(c) || (c >= 'a' && c <= 'f'))
+        Some(name.substring(from, i))
+      } else return None
+    if (i != end) None
+    else Some(Segment(p, first.toLong, last.toLong, tag.map(decodeTblTag)))
+  }
 
   private[sources] def encodeTblTag(tbl: Option[String]): String = tbl match {
     case None => "n"
@@ -59,34 +96,140 @@ object ChangefeedLog {
     case c => c.toString
   }
 
-  private[sources] def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '\\' => b.append('\\'); i += 2
-          case 't' => b.append('\t'); i += 2
-          case 'n' => b.append('\n'); i += 2
-          case 'r' => b.append('\r'); i += 2
-          case 'N' => b.append("\\N"); i += 2 // not produced by esc; keep literal
-          case other => b.append(c).append(other); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
   private def fmt(r: Record): String =
     s"${r.sortUs}\t${r.tbl.map(esc).getOrElse(Null)}\t" +
       s"${r.key.map(esc).getOrElse(Null)}\t${esc(r.value)}"
 
-  private[sources] def parse(line: String): Record = {
-    val parts = line.split("\t", 4)
-    require(parts.length == 4, s"malformed changefeed log line: $line")
-    def opt(s: String): Option[String] = if (s == Null) None else Some(unesc(s))
-    Record(parts(0).toLong, opt(parts(1)), opt(parts(2)), unesc(parts(3)))
+  /** The one parser of the row format: a cursor over a segment file's
+    * bytes. `next()` finds the next non-empty line — `\n`, `\r` and
+    * `\r\n` each end one, as `readAllLines` has it — splits it at its
+    * first three tabs and parses `sort_us`; a line with fewer than
+    * three tabs, or a non-numeric `sort_us`, throws. The text fields
+    * stay where they are until asked for: `tbl`, `key` and `value`
+    * return [[UTF8String]] slices of the buffer, and a field is
+    * unescaped into a copy only when it holds a backslash. `\N` is
+    * SQL NULL for `tbl` and `key` and a literal `\N` inside `value`;
+    * `\\ \t \n \r` are decoded, any other escape and a trailing lone
+    * backslash are kept as written. Bytes are not checked for UTF-8
+    * here, so the relay forwards a value verbatim, as the reference
+    * does with its `value: bytes`; [[record]] decodes strictly. */
+  final class SegmentReader(buf: Array[Byte]) {
+    private var pos = 0
+    // [from, until) of tbl, key and value in `buf`; bit i of `escaped`
+    // is set when field i holds a backslash
+    private val from = new Array[Int](3)
+    private val until = new Array[Int](3)
+    private var escaped = 0
+    private var us = 0L
+
+    def sortUs: Long = us
+
+    /** Advance to the next non-empty line; false at the end of the file. */
+    def next(): Boolean = {
+      val n = buf.length
+      while (pos < n && (buf(pos) == '\n' || buf(pos) == '\r')) pos += 1
+      if (pos == n) return false
+      val start = pos
+      var usEnd = -1
+      var field = -1 // the text field being scanned, -1 for sort_us
+      var esc = 0
+      var b: Int = buf(pos)
+      while (b != '\n' && b != '\r') {
+        if (b == '\\') { if (field >= 0) esc |= 1 << field }
+        else if (b == '\t' && field < 2) {
+          if (field < 0) usEnd = pos else until(field) = pos
+          field += 1
+          from(field) = pos + 1
+        }
+        pos += 1
+        b = if (pos < n) buf(pos) else '\n'
+      }
+      require(field == 2, "malformed changefeed log line: " +
+        new String(buf, start, pos - start, StandardCharsets.UTF_8))
+      until(2) = pos
+      escaped = esc
+      us = parseUs(start, usEnd)
+      true
+    }
+
+    def tbl: UTF8String = if (isNull(0)) null else utf8(0)
+    def key: UTF8String = if (isNull(1)) null else utf8(1)
+    def value: UTF8String = utf8(2)
+
+    /** The current line as a [[Record]], its fields decoded strictly: a
+      * malformed UTF-8 sequence throws [[java.nio.charset.MalformedInputException]]
+      * rather than becoming U+FFFD. */
+    def record: Record = Record(us,
+      if (isNull(0)) None else Some(string(0)),
+      if (isNull(1)) None else Some(string(1)),
+      string(2))
+
+    private def isNull(i: Int): Boolean =
+      until(i) - from(i) == 2 && buf(from(i)) == '\\' && buf(from(i) + 1) == 'N'
+
+    private def utf8(i: Int): UTF8String =
+      if ((escaped & (1 << i)) == 0) UTF8String.fromBytes(buf, from(i), until(i) - from(i))
+      else UTF8String.fromBytes(unescape(from(i), until(i)))
+
+    private def string(i: Int): String =
+      if ((escaped & (1 << i)) == 0) decode(buf, from(i), until(i) - from(i))
+      else { val u = unescape(from(i), until(i)); decode(u, 0, u.length) }
+
+    private def unescape(start: Int, end: Int): Array[Byte] = {
+      val out = new Array[Byte](end - start)
+      var i = start
+      var n = 0
+      while (i < end) {
+        val c = buf(i)
+        if (c == '\\' && i + 1 < end) {
+          val e = buf(i + 1)
+          if (e == '\\') { out(n) = e; n += 1 }
+          else if (e == 't') { out(n) = '\t'.toByte; n += 1 }
+          else if (e == 'n') { out(n) = '\n'.toByte; n += 1 }
+          else if (e == 'r') { out(n) = '\r'.toByte; n += 1 }
+          else { out(n) = c; out(n + 1) = e; n += 2 }
+          i += 2
+        } else { out(n) = c; n += 1; i += 1 }
+      }
+      if (n == out.length) out else java.util.Arrays.copyOf(out, n)
+    }
+
+    /** `Long.parseLong`'s rules, without a String for the common case of
+      * at most 18 ASCII digits. */
+    private def parseUs(start: Int, end: Int): Long = {
+      var v = 0L
+      var i = start
+      if (end - start <= 18)
+        while (i < end && buf(i) >= '0' && buf(i) <= '9') { v = v * 10 + (buf(i) - '0'); i += 1 }
+      if (i == end && end > start) v
+      else java.lang.Long.parseLong(
+        new String(buf, start, end - start, StandardCharsets.UTF_8))
+    }
+  }
+
+  /** UTF-8 to String, throwing on malformed input. The JDK's String
+    * decoder replaces malformed input with U+FFFD, so only a field that
+    * then holds one is decoded again by a reporting decoder. */
+  private def decode(b: Array[Byte], off: Int, len: Int): String = {
+    val s = new String(b, off, len, StandardCharsets.UTF_8)
+    if (s.indexOf('\uFFFD') < 0) s
+    else StandardCharsets.UTF_8.newDecoder()
+      .decode(java.nio.ByteBuffer.wrap(b, off, len)).toString
+  }
+
+  /** The records of a segment file's bytes, through [[SegmentReader]]. */
+  private[sources] def parse(bytes: Array[Byte]): Iterator[Record] = {
+    val r = new SegmentReader(bytes)
+    new Iterator[Record] {
+      private var ready = r.next()
+      override def hasNext: Boolean = ready
+      override def next(): Record = {
+        if (!ready) throw new NoSuchElementException("end of segment")
+        val rec = r.record
+        ready = r.next()
+        rec
+      }
+    }
   }
 
   /** Append one immutable segment (records sorted by sort_us; write to a
@@ -136,29 +279,57 @@ object ChangefeedLog {
     dst
   }
 
+  /** The segments in `dir`, ordered by (firstUs, lastUs, file name). */
   def listSegments(dir: String): Seq[Segment] = {
+    val named = listNamed(dir)
+    java.util.Arrays.sort(named, ByRange)
+    named.iterator.map(_._1).toList
+  }
+
+  /** The largest lastUs in `dir`, from one listing and without a sort:
+    * the offset a micro-batch stream polls for between batches. */
+  def maxLastUs(dir: String): Option[Long] = {
+    val named = listNamed(dir)
+    if (named.isEmpty) None else Some(named.iterator.map(_._1.lastUs).max)
+  }
+
+  // each comparison reads keys computed once per listing; a sortBy over
+  // (firstUs, lastUs, path.toString) boxed both longs and rebuilt the
+  // path string on every comparison. One directory, so comparing file
+  // names orders as comparing paths did.
+  private val ByRange: java.util.Comparator[(Segment, String)] = (a, b) => {
+    val c = java.lang.Long.compare(a._1.firstUs, b._1.firstUs)
+    if (c != 0) c
+    else {
+      val d = java.lang.Long.compare(a._1.lastUs, b._1.lastUs)
+      if (d != 0) d else a._2.compareTo(b._2)
+    }
+  }
+
+  /** Every segment in `dir` with its file name, in listing order. */
+  private def listNamed(dir: String): Array[(Segment, String)] = {
     val d = Paths.get(dir)
-    if (!Files.isDirectory(d)) Seq.empty
+    if (!Files.isDirectory(d)) Array.empty
     else {
       // close the directory stream — this runs on the driver every
       // micro-batch, so a leaked fd per call adds up in a long stream
       val st = Files.list(d)
       try {
         st.iterator.asScala.flatMap { p =>
-          p.getFileName.toString match {
-            case SegmentName(first, last, _, tag) =>
-              Some(Segment(p, first.toLong, last.toLong,
-                Option(tag).map(decodeTblTag)))
-            case _ => None
-          }
-        }.toList
+          val name = p.getFileName.toString
+          segmentOf(p, name).map((_, name))
+        }.toArray
       } finally st.close()
-    }.sortBy(s => (s.firstUs, s.lastUs, s.path.toString))
+    }
   }
 
-  def readSegment(path: Path): Iterator[Record] =
-    Files.readAllLines(path, StandardCharsets.UTF_8).iterator.asScala
-      .filter(_.nonEmpty).map(parse)
+  /** A segment's records, decoded strictly (see [[SegmentReader.record]]):
+    * compaction rewrites from these, and must not swap a byte it cannot
+    * decode for U+FFFD. */
+  def readSegment(path: Path): Iterator[Record] = parse(Files.readAllBytes(path))
+
+  /** A reader over a segment file, read whole (see [[SegmentReader]]). */
+  def openSegment(path: Path): SegmentReader = new SegmentReader(Files.readAllBytes(path))
 
   /** The replica-GC threshold: data at or below this sort_us may have
     * been reclaimed; a consumer cursor below it is invalid. */

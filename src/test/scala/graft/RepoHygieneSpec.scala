@@ -218,4 +218,22 @@ class RepoHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"min(affineHash( in: $offenders — build signatures with Dedup.minhashSigs")
   }
+
+  test("one changefeed segment parser; payloads published as the bytes read") {
+    // ChangefeedLog.SegmentReader is the one parser of the row format
+    // (the relay's reader and readSegment both run on it); a line
+    // reader or a tab split beside it is a second copy of the escape
+    // rules, and a String round trip on the relay path re-encodes
+    // every payload
+    val offenders = scalaFiles("src/main/scala/graft/sources")
+      .filter { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        src.contains("Files.readAllLines") || src.contains("split(\"\\t\"")
+      }
+    assert(offenders.isEmpty,
+      s"line reader or tab split in: $offenders — parse with ChangefeedLog.SegmentReader")
+    assert(occurrences(Paths.get("src/main/scala/graft/cdc/ChangefeedPipeline.scala"),
+      ".getBytes(UTF_8)") === 0,
+      "payload re-encoded in ChangefeedPipeline — publish the binary column's bytes")
+  }
 }

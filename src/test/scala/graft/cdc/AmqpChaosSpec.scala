@@ -138,4 +138,53 @@ class PipelineAmqpChaosSpec extends graft.SparkSuite {
       new AmqpQueue(addr).close()
     } finally broker.stop()
   }
+
+  test("without confirms: a batched write into a crashed broker fails the query; replay redelivers everything") {
+    val broker = new FakeAmqpBroker
+    val addr = s"amqp://127.0.0.1:${broker.port}/e2e-chaos-runs"
+    val store = new InMemoryCursorStore("t-amqp-e2e-chaos-runs")
+    val ckpt = Files.createTempDirectory("graft-chaos-runs-ckpt").toString
+    val evDir = Files.createTempDirectory("graft-chaos-runs-ev")
+    Files.copy(java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
+      evDir.resolve("events.parquet"))
+    try {
+      // the JVM's cached connection is up; then the broker crashes and
+      // its kernel resets the connection, so the first batched write of
+      // run 1 meets a dead socket. Fire-and-forget has only the write's
+      // error to go on: it must fail the task, the batch and the query.
+      new AmqpQueue(addr).publish("warm-up".getBytes(UTF_8))
+      broker.awaitPublished(1)
+      broker.resetConnections()
+      Thread.sleep(200)
+      val p1 = new ChangefeedPipeline(new AmqpQueue(addr), store, ckpt)
+      val q1 = p1.start(spark,
+        Changefeed.streamFromEventsDir(spark, evDir.toString))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q1.processAllAvailable()
+      }
+      q1.stop()
+      assert(store.get().isEmpty, s"cursor leaked from a failed batch: ${store.get()}")
+
+      // run 2: same checkpoint; the write's IOException evicted the dead
+      // client, so the replayed batch redials and publishes in runs
+      val p2 = new ChangefeedPipeline(new AmqpQueue(addr), store, ckpt)
+      val q2 = p2.start(spark,
+        Changefeed.streamFromEventsDir(spark, evDir.toString))
+      q2.processAllAvailable()
+      q2.stop()
+      assert(p2.messagesSent.value === 1000L)
+      val want = (0L to 999L).toSet // sf0.001 event_ids
+      def publishedKeys(): Set[Long] = broker.published.map(_._2)
+        .flatMap(v => "\"key\":\"\\[(\\d+)\\]\"".r
+          .findFirstMatchIn(v).map(_.group(1).toLong)).toSet
+      val deadline = System.nanoTime() + 60000L * 1000000L
+      while (!want.subsetOf(publishedKeys()) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(want.subsetOf(publishedKeys()),
+        s"missing keys after replay: ${(want -- publishedKeys()).take(5)}")
+      assert(store.get().isDefined, "resolved cursor missing after recovery")
+      assert(broker.error == null, s"broker error: ${broker.error}")
+      new AmqpQueue(addr).close()
+    } finally broker.stop()
+  }
 }

@@ -197,4 +197,85 @@ class AmqpQueueSpec extends AnyFunSuite {
       q.close()
     } finally broker2.stop()
   }
+
+  // a run with a body over the 64 B frame-max (three body frames), an
+  // empty body (no body frame) and a multi-byte character
+  private val run: Seq[Array[Byte]] = Seq("first".getBytes(UTF_8),
+    Array.fill[Byte](130)(5), Array.emptyByteArray, "\u00e9-last".getBytes(UTF_8))
+
+  test("golden bytes: a run of publishes is each publish's frames back to back") {
+    assert(hex(publishRunFrames(4, "q", run, 64L)) ===
+      run.map(b => hex(publishFrames(4, "q", b, 64L))).mkString)
+    assert(frames(publishRunFrames(4, "q", run, 64L)).map(_._1) === Seq(
+      FrameMethod, FrameHeader, FrameBody,
+      FrameMethod, FrameHeader, FrameBody, FrameBody, FrameBody,
+      FrameMethod, FrameHeader,
+      FrameMethod, FrameHeader, FrameBody))
+  }
+
+  test("publishAll puts exactly the run's publish frames on the wire, on one channel") {
+    val broker = new FakeAmqpBroker(tuneFrameMax = 64)
+    try {
+      val q = new AmqpQueue(s"amqp://127.0.0.1:${broker.port}/run")
+      q.publishAll(run)
+      val got = broker.awaitPublished(run.size)
+      assert(broker.error == null, s"broker error: ${broker.error}")
+      assert(got.map(_._2.getBytes(UTF_8).toSeq) === run.map(_.toSeq))
+      assert(broker.publishChannels.size === 1)
+      val ch = broker.publishChannels.head
+      assert(hex(broker.publishWire) === run.map(b => hex(publishFrames(ch, "run", b, 64L))).mkString)
+      q.close()
+    } finally broker.stop()
+  }
+
+  test("concurrent publishAll runs reach the wire whole") {
+    val broker = new FakeAmqpBroker(tuneFrameMax = 64) // many frames per run
+    try {
+      val q = new AmqpQueue(s"amqp://127.0.0.1:${broker.port}/runs?channels=4")
+      val (threads, runs, per) = (8, 5, 20)
+      def body(t: Int, r: Int, i: Int) = s"m-$t-$r-$i-" + "x" * (i * 7)
+      val ts = (0 until threads).map { t =>
+        new Thread(() => (0 until runs).foreach { r =>
+          q.publishAll((0 until per).map(i => body(t, r, i).getBytes(UTF_8)))
+        })
+      }
+      ts.foreach(_.start()); ts.foreach(_.join(20000))
+      val got = broker.awaitPublished(threads * runs * per)
+      assert(broker.error == null, s"broker error: ${broker.error}")
+      assert(got.map(_._2).sorted === (for (t <- 0 until threads; r <- 0 until runs;
+        i <- 0 until per) yield body(t, r, i)).sorted)
+      // a run is one write under the socket lock: no frame of another
+      // channel lands inside any publish of it
+      assert(broker.interleavedFrames === 0L)
+      q.close()
+    } finally broker.stop()
+  }
+
+  test("publishAll in confirm mode waits for each message's ack") {
+    val acking = new FakeAmqpBroker
+    try {
+      val q = new AmqpQueue(s"amqp://127.0.0.1:${acking.port}/conf-run?confirm=true&channels=2")
+      q.publishAll(Seq("a", "b", "c").map(_.getBytes(UTF_8)))
+      assert(acking.awaitPublished(3).map(_._2) === Seq("a", "b", "c"))
+      assert(acking.error == null, s"broker error: ${acking.error}")
+      q.close()
+    } finally acking.stop()
+
+    // a broker that never confirms: the run stops at its first message,
+    // whose ack times out, and the rest is never written
+    val silent = new FakeAmqpBroker(dropAcks = true)
+    try {
+      val c = new AmqpClient("127.0.0.1", silent.port, channels = 1,
+        confirms = true, confirmTimeoutMs = 500)
+      c.connect()
+      c.declareQueue("conf-run")
+      val e = intercept[java.io.IOException](
+        c.publishAll("conf-run", Seq("x", "y").map(_.getBytes(UTF_8))))
+      assert(e.getMessage.contains("confirm timed out"))
+      assert(silent.awaitPublished(1).map(_._2) === Seq("x"))
+      Thread.sleep(100)
+      assert(silent.published.map(_._2) === Seq("x"))
+      c.abort()
+    } finally silent.stop()
+  }
 }

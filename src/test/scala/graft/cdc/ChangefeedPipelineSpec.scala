@@ -1,5 +1,6 @@
 package graft.cdc
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import graft.SparkSuite
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -274,6 +275,44 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(InMemoryQueue.messages(qname).size === 1)
     assert(pipeline.messagesDeadLettered.value === 0L)
   }
+
+  test("invalid UTF-8 in a segment's value reaches the queue byte for byte") {
+    // the reference's value is bytes and it forwards them; the relay
+    // never decodes a payload, so a byte that is not UTF-8 survives
+    val qname = "t-raw-bytes"
+    BytesQueue.buffers.remove(qname)
+    val log = Files.createTempDirectory("graft-rawlog")
+    val value = "{\"after\": \"".getBytes(UTF_8) ++ Array(0xFF.toByte) ++ "\"}".getBytes(UTF_8)
+    Files.write(log.resolve("seg-1-2-raw.log"),
+      "1\tevents\t[1]\t".getBytes(UTF_8) ++ value ++
+        "\n2\t\\N\t\\N\t{\"resolved\": \"2.0000000000\"}\n".getBytes(UTF_8))
+    val store = new InMemoryCursorStore(qname)
+    val pipeline = new ChangefeedPipeline(new BytesQueue(qname), store, ckpt())
+    val q = pipeline.startFromLog(spark, log.toString)
+    q.processAllAvailable(); q.stop()
+    val want = "{\"table\":\"events\",\"key\":\"[1]\",\"value\":".getBytes(UTF_8) ++
+      value ++ "}".getBytes(UTF_8)
+    assert(BytesQueue.messages(qname).map(_.toSeq) === Seq(want.toSeq))
+    assert(pipeline.messagesSent.value === 1L)
+    assert(store.get() === Some("2"))
+  }
+}
+
+/** Keeps every published body as the bytes it arrived as, per name
+  * (an [[InMemoryQueue]] decodes them to Strings). */
+class BytesQueue(name: String) extends MessageQueue {
+  override def publish(data: Array[Byte]): Unit = {
+    BytesQueue.buffers.getOrElseUpdate(name,
+      new java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]()).add(data.clone())
+    ()
+  }
+}
+
+object BytesQueue {
+  val buffers = scala.collection.concurrent.TrieMap.empty[String,
+    java.util.concurrent.ConcurrentLinkedQueue[Array[Byte]]]
+  def messages(name: String): Seq[Array[Byte]] =
+    buffers.get(name).toSeq.flatMap(_.toArray(Array.empty[Array[Byte]]))
 }
 
 /** A queue whose `failOn`-th publish (counted per name across the

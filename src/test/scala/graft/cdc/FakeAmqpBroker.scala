@@ -61,6 +61,15 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
 
   def interleavedFrames: Long = interleaved.get
 
+  // every publish frame (Basic.Publish method, content header, body) as
+  // read, re-encoded: the bytes the client put on the wire for them
+  private val wire = new java.io.ByteArrayOutputStream()
+  private def recordWire(f: Frame): Unit =
+    wire.synchronized(writeFrame(wire, f.tpe, f.channel, f.payload))
+
+  /** The publish frames of every connection, in arrival order. */
+  def publishWire: Array[Byte] = wire.synchronized(wire.toByteArray)
+
   /** When set, the next Basic.Publish method frame hard-drops its
     * connection BEFORE any content is accepted — a deterministic
     * broker crash mid-publish: the producer has the method frame on
@@ -93,6 +102,17 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
   /** Hard-drop every live client socket (simulated broker crash). */
   def killConnections(): Unit = live.synchronized {
     live.foreach(s => try s.close() catch { case _: java.io.IOException => () })
+    live.clear()
+  }
+
+  /** Drop every live client socket with a TCP reset (linger 0), as a
+    * crashed host's kernel does: the client's next write fails, where
+    * after a plain close its first write still succeeds. */
+  def resetConnections(): Unit = live.synchronized {
+    live.foreach { s =>
+      try { s.setSoLinger(true, 0); s.close() }
+      catch { case _: java.io.IOException => () }
+    }
     live.clear()
   }
 
@@ -188,6 +208,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
                   s"publish started on channel ${f.channel} mid-content")
                 pending(f.channel) = new Pending(rk)
                 inContent = f.channel
+                recordWire(f)
               }
             case (ClassConnection, 50) =>
               writeFrame(out, FrameMethod, 0, method(ClassConnection, 51)(w => w))
@@ -197,6 +218,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
         case FrameHeader =>
           val p = pending.getOrElse(f.channel,
             throw new AssertionError(s"header without publish on ch ${f.channel}"))
+          recordWire(f)
           val h = new Reader(f.payload)
           require(h.u16() == ClassBasic); h.u16() // weight
           p.expected = h.u64()
@@ -209,6 +231,7 @@ private[cdc] class FakeAmqpBroker(tuneFrameMax: Long = 131072L,
           // verified, not just tolerated
           require(tuneFrameMax <= 8 || f.payload.length + 8 <= tuneFrameMax,
             s"body frame ${f.payload.length + 8}B exceeds frame-max $tuneFrameMax")
+          recordWire(f)
           p.body.write(f.payload)
           if (p.expected >= 0 && p.body.size() >= p.expected)
             complete(f.channel, p)

@@ -104,4 +104,17 @@ class CompactionSpec extends SparkSuite {
     assert(ChangefeedLog.compact(dir, 100L).isEmpty) // straddler left alone
     assert(ChangefeedLog.listSegments(dir).length === 1)
   }
+
+  test("invalid UTF-8 below the cursor fails compaction; no byte is rewritten") {
+    // the relay forwards such bytes verbatim, but compaction rewrites
+    // records as text: it must not swap the byte for U+FFFD
+    val dir = buildLog()
+    val bad = java.nio.file.Paths.get(dir, "seg-50-50-badutf8.log")
+    val bytes = "50\tevents\tk9\tv".getBytes("UTF-8") :+ 0xFF.toByte
+    Files.write(bad, bytes)
+    val before = ChangefeedLog.listSegments(dir).map(_.path)
+    intercept[java.nio.charset.MalformedInputException](ChangefeedLog.compact(dir, 100L))
+    assert(ChangefeedLog.listSegments(dir).map(_.path) === before)
+    assert(Files.readAllBytes(bad).sameElements(bytes))
+  }
 }
