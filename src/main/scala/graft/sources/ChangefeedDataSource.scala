@@ -595,10 +595,17 @@ class ChangefeedSegmentWriter(dir: String, segmentId: String,
   override def write(row: InternalRow): Unit = {
     buf += ChangefeedLog.Record(
       row.getLong(0),
-      if (row.isNullAt(1)) None else Some(row.getUTF8String(1).toString),
-      if (row.isNullAt(2)) None else Some(row.getUTF8String(2).toString),
-      row.getUTF8String(3).toString)
+      if (row.isNullAt(1)) None else Some(text(row, 1)),
+      if (row.isNullAt(2)) None else Some(text(row, 2)),
+      text(row, 3))
     ()
+  }
+  // decoded strictly: the changefeed source forwards a field's bytes
+  // unchecked, and a byte that is not UTF-8 fails the write rather than
+  // reaching the log as U+FFFD
+  private def text(row: InternalRow, i: Int): String = {
+    val b = row.getUTF8String(i).getBytes
+    ChangefeedLog.decodeStrict(b, 0, b.length)
   }
   override def commit(): WriterCommitMessage = {
     if (buf.nonEmpty) {

@@ -34,46 +34,11 @@ object ChangefeedLog {
   final case class Record(sortUs: Long, tbl: Option[String],
       key: Option[String], value: String)
 
-  /** The segment a file name denotes, or None: the name must be
-    * `seg-<firstUs>-<lastUs>-<id>[-t<tag>].log`, the numbers ASCII
-    * digits and the id ASCII letters and digits. The optional -t<tag>
-    * marks a table-routed segment: tn (resolved/NULL tbl) or
-    * tx<hex-utf8-of-table-name> (hex keeps arbitrary table names inside
-    * the filename grammar). A hand scan, not a regex: a streaming
-    * source parses every name in the log each time it polls. */
-  private[sources] def segmentOf(p: Path, name: String): Option[Segment] = {
-    val end = name.length - ".log".length
-    var i = "seg-".length
-    // Int, not Char, predicates: Function1 is specialized on Int, so a
-    // scan boxes nothing
-    def scan(ok: Int => Boolean): Boolean = {
-      val from = i
-      while (i < end && ok(name.charAt(i))) i += 1
-      i > from
-    }
-    def digit(c: Int): Boolean = c >= '0' && c <= '9'
-    def number(): String = {
-      val from = i
-      if (scan(digit) && i < end && name.charAt(i) == '-') { i += 1; name.substring(from, i - 1) }
-      else null
-    }
-    if (!name.startsWith("seg-") || !name.endsWith(".log")) return None
-    val first = number()
-    val last = if (first == null) null else number()
-    if (last == null ||
-        !scan(c => digit(c) || (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z'))) return None
-    val tag =
-      if (i == end) None
-      else if (name.startsWith("-tn", i)) { i += 3; Some("n") }
-      else if (name.startsWith("-tx", i)) {
-        val from = i + 2
-        i += 3
-        scan(c => digit(c) || (c >= 'a' && c <= 'f'))
-        Some(name.substring(from, i))
-      } else return None
-    if (i != end) None
-    else Some(Segment(p, first.toLong, last.toLong, tag.map(decodeTblTag)))
-  }
+  // optional -t<tag> = table-routed segment: tn (resolved/NULL tbl) or
+  // tx<hex-utf8-of-table-name> (hex keeps arbitrary table names inside
+  // the filename grammar)
+  private val SegmentName =
+    raw"seg-(\d+)-(\d+)-([0-9a-zA-Z]+)(?:-t(n|x[0-9a-f]*))?\.log".r
 
   private[sources] def encodeTblTag(tbl: Option[String]): String = tbl match {
     case None => "n"
@@ -172,8 +137,8 @@ object ChangefeedLog {
       else UTF8String.fromBytes(unescape(from(i), until(i)))
 
     private def string(i: Int): String =
-      if ((escaped & (1 << i)) == 0) decode(buf, from(i), until(i) - from(i))
-      else { val u = unescape(from(i), until(i)); decode(u, 0, u.length) }
+      if ((escaped & (1 << i)) == 0) decodeStrict(buf, from(i), until(i) - from(i))
+      else { val u = unescape(from(i), until(i)); decodeStrict(u, 0, u.length) }
 
     private def unescape(start: Int, end: Int): Array[Byte] = {
       val out = new Array[Byte](end - start)
@@ -194,28 +159,15 @@ object ChangefeedLog {
       if (n == out.length) out else java.util.Arrays.copyOf(out, n)
     }
 
-    /** `Long.parseLong`'s rules, without a String for the common case of
-      * at most 18 ASCII digits. */
-    private def parseUs(start: Int, end: Int): Long = {
-      var v = 0L
-      var i = start
-      if (end - start <= 18)
-        while (i < end && buf(i) >= '0' && buf(i) <= '9') { v = v * 10 + (buf(i) - '0'); i += 1 }
-      if (i == end && end > start) v
-      else java.lang.Long.parseLong(
-        new String(buf, start, end - start, StandardCharsets.UTF_8))
-    }
+    private def parseUs(start: Int, end: Int): Long =
+      java.lang.Long.parseLong(new String(buf, start, end - start, StandardCharsets.UTF_8))
   }
 
-  /** UTF-8 to String, throwing on malformed input. The JDK's String
-    * decoder replaces malformed input with U+FFFD, so only a field that
-    * then holds one is decoded again by a reporting decoder. */
-  private def decode(b: Array[Byte], off: Int, len: Int): String = {
-    val s = new String(b, off, len, StandardCharsets.UTF_8)
-    if (s.indexOf('\uFFFD') < 0) s
-    else StandardCharsets.UTF_8.newDecoder()
+  /** UTF-8 to String, throwing on malformed input rather than
+    * replacing it with U+FFFD as the JDK's String decoder does. */
+  private[sources] def decodeStrict(b: Array[Byte], off: Int, len: Int): String =
+    StandardCharsets.UTF_8.newDecoder()
       .decode(java.nio.ByteBuffer.wrap(b, off, len)).toString
-  }
 
   /** The records of a segment file's bytes, through [[SegmentReader]]. */
   private[sources] def parse(bytes: Array[Byte]): Iterator[Record] = {
@@ -317,7 +269,12 @@ object ChangefeedLog {
       try {
         st.iterator.asScala.flatMap { p =>
           val name = p.getFileName.toString
-          segmentOf(p, name).map((_, name))
+          name match {
+            case SegmentName(first, last, _, tag) =>
+              Some((Segment(p, first.toLong, last.toLong,
+                Option(tag).map(decodeTblTag)), name))
+            case _ => None
+          }
         }.toArray
       } finally st.close()
     }

@@ -296,6 +296,30 @@ class ChangefeedPipelineSpec extends SparkSuite {
     assert(pipeline.messagesSent.value === 1L)
     assert(store.get() === Some("2"))
   }
+
+  test("invalid UTF-8 relayed into a changefeed-log queue fails the batch, never U+FFFD") {
+    // the log sink writes text records; a value it cannot decode must
+    // fail the micro-batch (as reading the segment did before) rather
+    // than land in the output log with U+FFFD in place of its byte
+    val log = Files.createTempDirectory("graft-rawlog-in")
+    val out = Files.createTempDirectory("graft-rawlog-out")
+    Files.write(log.resolve("seg-1-2-raw.log"),
+      "1\tevents\t[1]\t{\"after\": \"".getBytes(UTF_8) ++ Array(0xFF.toByte) ++
+        "\"}\n2\t\\N\t\\N\t{\"resolved\": \"2.0000000000\"}\n".getBytes(UTF_8))
+    val store = new InMemoryCursorStore("t-raw-log")
+    val pipeline = new ChangefeedPipeline(new ChangefeedLogQueue(out.toString), store, ckpt())
+    val q = pipeline.startFromLog(spark, log.toString)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      q.processAllAvailable()
+    }
+    q.stop()
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.nio.charset.CharacterCodingException]), e)
+    val written = graft.sources.ChangefeedLog.listSegments(out.toString)
+    assert(written.forall(s => !new String(Files.readAllBytes(s.path), UTF_8).contains('\uFFFD')))
+    assert(written.isEmpty)
+    assert(store.get() === None)
+  }
 }
 
 /** Keeps every published body as the bytes it arrived as, per name

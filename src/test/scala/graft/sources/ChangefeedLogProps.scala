@@ -160,38 +160,6 @@ object ChangefeedLogProps extends Properties("ChangefeedLog") {
       Prop(back == want) :| s"got $back want $want"
     }
 
-  // the file-name grammar as the regex segmentOf replaced, kept as the
-  // reference
-  private val SegmentNameRef =
-    raw"seg-(\d+)-(\d+)-([0-9a-zA-Z]+)(?:-t(n|x[0-9a-f]*))?\.log".r
-
-  private val segmentName: Gen[String] = Gen.oneOf(
-    for {
-      first <- Gen.chooseNum(0L, Long.MaxValue)
-      last <- Gen.chooseNum(0L, Long.MaxValue)
-      id <- Gen.alphaNumStr.map(_.take(12))
-      tag <- Gen.oneOf("", "-tn", "-tx", "-tx6576656e7473", "-tx0F", "-t")
-    } yield s"seg-$first-$last-$id$tag.log",
-    Gen.listOf(Gen.oneOf("seg-", "-", "1", "23", "abc", "Z", "-tn", "-tx", "-t",
-      "0f", "g", ".log", ".", "\u00e9", "\u0663", "x", "n", "99999999999999999999"))
-      .map(_.mkString))
-
-  property("segment names: the hand scan == the regex it replaced") =
-    forAll(segmentName) { name =>
-      def run(f: => Option[(Long, Long, Option[Option[String]])]) =
-        try Right(f) catch { case e: Exception => Left(e.getClass) }
-      // only the name is parsed; a Path of an arbitrary string can fail
-      // in a JVM whose file-name encoding is ASCII, so one fixed Path
-      val got = run(ChangefeedLog.segmentOf(java.nio.file.Paths.get("segment"), name)
-        .map(s => (s.firstUs, s.lastUs, s.tblTag)))
-      val want = run(name match {
-        case SegmentNameRef(f, l, _, tag) =>
-          Some((f.toLong, l.toLong, Option(tag).map(ChangefeedLog.decodeTblTag)))
-        case _ => None
-      })
-      Prop(got == want) :| s"$name: got $got want $want"
-    }
-
   property("listSegments reports the exact [first,last] range") =
     forAll(Gen.nonEmptyListOf(record)) { recs =>
       val dir = Files.createTempDirectory("cflog-prop").toString
